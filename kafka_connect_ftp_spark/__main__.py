@@ -161,16 +161,14 @@ def main(argv: list[str] | None = None) -> int:
             tls=cfg.tls,
         )
 
-    pipeline = cfg.build_pipeline(spark, args.state_dir, local_root=args.local_root)
+    pipeline = cfg.build_pipeline(
+        spark, args.state_dir, source=source, local_root=args.local_root
+    )
 
     if args.list_only:
         # metadata only: listing for printing must not open any file
-        listing = (
-            source.listing(spark, cfg.monitors)
-            if source
-            else pipeline.default_meta_listing()
-        )
-        for r in listing.orderBy("path").select("path", "size", "modification_time").collect():
+        listing = pipeline.default_listing()
+        for r in listing.orderBy("path").collect():
             print(f"{r.size:>10}  {r.modification_time}  {r.path}")
         return 0
 
@@ -204,15 +202,7 @@ def main(argv: list[str] | None = None) -> int:
         t0 = time.time()
         if backoff.passed():
             try:
-                if source is not None:
-                    meta = source.listing(spark, cfg.monitors)
-                    listing = source.incremental_fetch(
-                        spark, meta, pipeline.load_state(),
-                        max_age_seconds=cfg.max_age_seconds or None,
-                    )
-                    pipeline.poll(listing, sink=sink, epoch=epoch)
-                else:
-                    pipeline.poll(sink=sink, epoch=epoch)
+                pipeline.poll(sink=sink, epoch=epoch)
                 backoff.next_success()
                 succeeded += 1
                 m = pipeline.last_metrics

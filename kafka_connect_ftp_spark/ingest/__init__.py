@@ -7,11 +7,13 @@ suffixes ("tail" mode) as Kafka records, with per-file metadata persisted
 in Kafka Connect's offset store (FtpMonitor.scala:109-122).
 
 Here the same semantics are one batch plan per poll tick
-(``snapshot.snapshot``): listing ⟕ state on path → change filter → delta
-extraction (binary substring + sha256 prefix check) → record projection,
-plus a merged new-state table. ``PollPipeline`` runs it against a local
-directory via Spark's ``binaryFile`` source with parquet-backed state;
-``streaming.py`` wraps the same plan in Structured Streaming.
+(``snapshot.snapshot``): listing ⟕ state on path → change filter → fetch
+of the changed files → delta extraction (binary substring + sha256 prefix
+check) → record projection, plus a merged new-state table.
+``PollPipeline`` runs it over a listing/fetch source (a local directory
+via Spark's ``binaryFile`` source by default, or ``sources.ftp.FtpSource``)
+with parquet-backed state; ``streaming/ingest_stream.py`` wraps the same
+tick in Structured Streaming.
 """
 
 from kafka_connect_ftp_spark.ingest.model import (  # noqa: F401

@@ -140,9 +140,12 @@ class FtpEngineConfig:
     def key_converter_name(self) -> str:
         return "struct_key" if self.key_style == "struct" else "string_key"
 
-    def build_pipeline(self, spark, state_dir: str, *, local_root: str | None = None):
-        """Assemble a PollPipeline (local mode) from this config.
+    def build_pipeline(
+        self, spark, state_dir: str, *, source=None, local_root: str | None = None
+    ):
+        """Assemble a PollPipeline from this config.
 
+        ``source`` is the listing/fetch source (default: the local tree).
         ``local_root`` remaps monitor paths under a local directory for
         file://-based deployments; omit to use the paths as-is.
         """
@@ -158,6 +161,7 @@ class FtpEngineConfig:
             spark,
             monitors,
             state_dir,
+            source=source,
             # keep the float: int() would truncate PT0.5S to a
             # filter-everything max_age of 0
             max_age_seconds=self.max_age_seconds if self.max_age_seconds else None,

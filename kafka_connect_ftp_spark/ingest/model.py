@@ -13,16 +13,24 @@ from dataclasses import dataclass
 
 from pyspark.sql import types as T
 
-# One row per file per poll tick — what a directory listing + fetch reveals.
+# One row per file per poll tick — what a directory listing reveals (a
+# source's ``listing``), and with ``content`` what its ``fetch`` adds.
 # Matches Spark's binaryFile columns (path, modificationTime, length, content).
-LISTING_SCHEMA = T.StructType(
+META_SCHEMA = T.StructType(
     [
         T.StructField("path", T.StringType(), False),
         T.StructField("size", T.LongType(), False),
         T.StructField("modification_time", T.TimestampType(), False),
-        T.StructField("content", T.BinaryType(), True),
     ]
 )
+
+
+def with_content(schema: T.StructType) -> T.StructType:
+    """``schema`` plus the nullable ``content`` column a fetch attaches."""
+    return T.StructType(schema.fields + [T.StructField("content", T.BinaryType(), True)])
+
+
+LISTING_SCHEMA = with_content(META_SCHEMA)
 
 # The per-path keyed state — field-for-field the reference's Connect offset
 # map (size, timestamp, hash, firstfetched, lastmodified, lastinspected,
@@ -151,3 +159,19 @@ def glob_free_prefix(pattern: str) -> str:
         # of a trailing slash — either way the walk root is the parent
         out = out[:-1]
     return "/".join(out) or "/"
+
+
+def walk_roots(monitors) -> list[str]:
+    """The disjoint walk roots of ``monitors``: each monitor's glob-free
+    prefix, minus any root nested under another, so a tree shared by
+    several monitors is listed once."""
+    roots: list[str] = []
+    for base in sorted({glob_free_prefix(m.pattern) for m in monitors}):
+        if not any(base == r or base.startswith(r.rstrip("/") + "/") for r in roots):
+            roots.append(base)
+    return roots
+
+
+def monitors_regex(monitors) -> str:
+    """One regex matching a path iff some monitor's pattern does."""
+    return "|".join(f"(?:{m.regex})" for m in monitors)

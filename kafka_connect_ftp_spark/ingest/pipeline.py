@@ -1,4 +1,4 @@
-"""Batch poll pipeline: local-directory listing source + parquet state.
+"""Batch poll pipeline: a listing/fetch source + parquet state.
 
 ``PollPipeline`` is the engine-side equivalent of FtpSourcePoller
 (FtpSourceTask.scala:19-75): each ``poll()`` lists the monitored tree,
@@ -7,15 +7,13 @@ and commits the merged state. Restartability comes from the state table
 exactly like Connect's offset store (SURVEY.md §3.3): a new PollPipeline
 over the same ``state_dir`` resumes incrementally.
 
-The listing is INCREMENTAL (round 9b): a metadata-only ``binaryFile``
-scan (content pruned from the scan schema — files never opened) joins
-the persisted state, and only changed files are read, inside their
-partitions — the reference's list-then-filter-then-fetch ordering
-(FtpMonitor.scala:110-119) with per-tick I/O proportional to the
-delta, not the corpus.
-
-For a live FTP remote, substitute ``ftp_listing`` from sources/ftp.py —
-the snapshot plan is source-agnostic.
+A source is two methods: ``listing(spark, monitors)`` returns metadata
+only (path, size, modification_time) and ``fetch(spark, meta)`` attaches
+``content`` to the rows it is given. The snapshot plan decides which
+rows those are — the reference's list-then-filter-then-fetch ordering
+(FtpMonitor.scala:110-119), so per-tick I/O is proportional to the
+delta, not the corpus. ``LocalTree`` (below) is the default source;
+``sources.ftp.FtpSource`` is the FTP one.
 """
 
 from __future__ import annotations
@@ -23,68 +21,37 @@ from __future__ import annotations
 import os
 import time as _time
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_connect_ftp_spark.ingest.model import STATE_SCHEMA, MonitoredPath
+from kafka_connect_ftp_spark.ingest.model import (
+    META_SCHEMA,
+    STATE_SCHEMA,
+    MonitoredPath,
+    monitors_regex,
+    walk_roots,
+    with_content,
+)
 from kafka_connect_ftp_spark.ingest.snapshot import empty_state, snapshot
-
-
-def local_listing(spark: SparkSession, base_dir: str, *, leaf_glob: str | None = None) -> DataFrame:
-    """List + fetch EVERY file under ``base_dir`` as LISTING_SCHEMA rows.
-
-    ``leaf_glob`` (the monitor pattern's file-name segment, e.g. ``*.csv``)
-    is pushed into the source as ``pathGlobFilter`` so non-matching files
-    are pruned at listing time — the engine-side analog of the reference
-    applying the name glob during LIST (FtpFileLister.scala:40).
-
-    NOTE (review 9b): this is the EAGER form — the scan's required
-    schema includes ``content``, so binaryFile reads every matched
-    file's bytes. The poll loop no longer uses it: per-tick I/O must be
-    proportional to the DELTA, not the corpus
-    (``PollPipeline.default_listing``'s metadata-join-fetch pipeline).
-    Retained for small trees and explicit full-ingest callers."""
-    reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
-    if leaf_glob and leaf_glob != "*":
-        reader = reader.option("pathGlobFilter", leaf_glob)
-    df = reader.load(base_dir)
-    # binaryFile paths are file:-URIs; state keys are plain absolute paths
-    return df.select(
-        F.regexp_replace(F.col("path"), "^file:", "").alias("path"),
-        F.col("length").alias("size"),
-        F.col("modificationTime").alias("modification_time"),
-        F.col("content"),
-    )
-
-
-def local_meta_listing(
-    spark: SparkSession, base_dir: str, *, leaf_glob: str | None = None
-) -> DataFrame:
-    """Metadata-only listing (path, size, modification_time): binaryFile
-    with ``content`` pruned out of the required schema never opens the
-    files — the LIST round-trip of the reference, bytes untouched."""
-    reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
-    if leaf_glob and leaf_glob != "*":
-        reader = reader.option("pathGlobFilter", leaf_glob)
-    return reader.load(base_dir).select(
-        F.regexp_replace(F.col("path"), "^file:", "").alias("path"),
-        F.col("length").alias("size"),
-        F.col("modificationTime").alias("modification_time"),
-    )
 
 
 def _local_fetch(meta: DataFrame) -> DataFrame:
     """Attach content to a metadata frame by reading each file INSIDE its
-    partition (the FtpSource.fetch shape for the local/shared-FS source):
-    bytes never pass through the driver and per-tick read volume is
-    bounded by the rows given, not the corpus. A file that vanished
-    between listing and read is skipped (the rotated-file rule)."""
-    from kafka_connect_ftp_spark.ingest.model import LISTING_SCHEMA
+    partition: bytes never pass through the driver and per-tick read
+    volume is bounded by the rows given, not the corpus. Every other
+    column passes through. A file that vanished between listing and
+    read is skipped (the rotated-file rule).
+
+    The rows arrive in the listing scan's partitions: dozens for a tree
+    of small files, since each file counts
+    ``spark.sql.files.openCostInBytes`` toward a scan split. ``coalesce``
+    (no shuffle) merges them to one per core, so the Python fetch and
+    everything downstream of it (sink files, state files) does not pay
+    per-partition overhead for a small delta."""
 
     def fetch_partition(batches):
-        import pandas as pd  # noqa: F401  (arrow batch type)
-
         for pdf in batches:
             contents = []
             for p in pdf["path"]:
@@ -96,23 +63,45 @@ def _local_fetch(meta: DataFrame) -> DataFrame:
             kept = pdf.assign(content=contents)
             yield kept[[c is not None for c in contents]]
 
-    return meta.select("path", "size", "modification_time").mapInPandas(
-        fetch_partition, LISTING_SCHEMA
-    )
+    cores = meta.sparkSession.sparkContext.defaultParallelism
+    return meta.coalesce(cores).mapInPandas(fetch_partition, with_content(meta.schema))
+
+
+class LocalTree:
+    """The local (or driver-mounted shared-FS) directory tree as a source."""
+
+    def listing(self, spark: SparkSession, monitors: Sequence[MonitoredPath]) -> DataFrame:
+        """One metadata-only ``binaryFile`` scan over the monitors'
+        disjoint base dirs: ``content`` is pruned from the scan schema,
+        so files are never opened. The monitors' regex is the only
+        filter. A missing monitored dir lists as empty, like FTP LIST on
+        a nonexistent path (FtpFileLister.scala:37-50 None case)."""
+        roots = [r for r in walk_roots(monitors) if os.path.isdir(r)]
+        if not roots:
+            return spark.createDataFrame([], META_SCHEMA)
+        scan = spark.read.format("binaryFile").option("recursiveFileLookup", "true").load(roots)
+        # binaryFile paths are file:-URIs; state keys are plain absolute paths
+        return scan.select(
+            F.regexp_replace(F.col("path"), "^file:", "").alias("path"),
+            F.col("length").alias("size"),
+            F.col("modificationTime").alias("modification_time"),
+        ).filter(F.col("path").rlike(monitors_regex(monitors)))
+
+    def fetch(self, spark: SparkSession, meta: DataFrame) -> DataFrame:
+        return _local_fetch(meta)
 
 
 class PollPipeline:
-    """Stateful poll loop over a local directory tree.
+    """Stateful poll loop over a listing/fetch ``source`` (default: the
+    local tree).
 
     State is a parquet table under ``state_dir`` (atomic replace per
     poll: write to a versioned subdir, then point the 'current' marker
-    at it). The marker/prune bookkeeping uses driver-local file IO, so
-    ``state_dir`` must be driver-local or a driver-mounted shared FS —
-    this pipeline's SOURCE is the local tree, so that is its natural
-    deployment; the object-store-portable ``_SUCCESS``-versioned state
-    pattern lives in ``hadoop_fs.py`` and is what the FTP/HTTP sources
-    use (review 9b: the previous docstring claimed object-store safety
-    this bookkeeping does not have).
+    at it). Every source — the local tree and FTP alike — commits
+    through this marker. The marker/prune bookkeeping uses driver-local
+    file IO, so ``state_dir`` must be driver-local or a driver-mounted
+    shared FS; it is not object-store safe (the ``_SUCCESS``-versioned
+    pattern in ``hadoop_fs.py`` is, and is what the HTTP source uses).
     """
 
     def __init__(
@@ -121,7 +110,8 @@ class PollPipeline:
         monitors: Sequence[MonitoredPath],
         state_dir: str,
         *,
-        max_age_seconds: int | None = None,
+        source=None,
+        max_age_seconds: float | None = None,
         drop_empty: bool = False,
         max_files_per_poll: int | None = None,
         keep_history: bool = False,
@@ -130,6 +120,7 @@ class PollPipeline:
     ) -> None:
         self.spark = spark
         self.monitors = list(monitors)
+        self.source = LocalTree() if source is None else source
         # the bucketed-state path is interpolated into a CREATE TABLE
         # ... LOCATION '<dir>' clause on restart re-registration; a
         # quote would make that SQL malformed with an opaque parse
@@ -301,76 +292,13 @@ class PollPipeline:
             if m and int(m.group(1)) <= cutoff:
                 shutil.rmtree(os.path.join(self.state_dir, entry), ignore_errors=True)
 
-    def default_meta_listing(self) -> DataFrame:
-        """Metadata-only listing over the monitors' common base dirs —
-        (path, size, modification_time), file bytes never read."""
-        from kafka_connect_ftp_spark.ingest.model import LISTING_SCHEMA
-
-        bases = {(_glob_base(m.path), _leaf_glob(m.pattern)) for m in self.monitors}
-        # a missing monitored dir lists as empty, like FTP LIST on a
-        # nonexistent path (FtpFileLister.scala:37-50 None case)
-        parts = [
-            local_meta_listing(self.spark, b, leaf_glob=g)
-            for b, g in sorted(bases)
-            if os.path.isdir(b)
-        ]
-        if not parts:
-            parts = [
-                self.spark.createDataFrame([], LISTING_SCHEMA).select(
-                    "path", "size", "modification_time"
-                )
-            ]
-        listing = parts[0]
-        for p in parts[1:]:
-            listing = listing.unionByName(p)
-        return listing.dropDuplicates(["path"])
-
     def default_listing(self) -> DataFrame:
-        """Incremental listing over the monitors' base dirs: a METADATA
-        scan joined to the persisted state decides which files need
-        bytes (the reference's list-then-filter-then-fetch ordering,
-        FtpMonitor.scala:110-119), and only those are opened — per-tick
-        read volume is proportional to the DELTA, not the corpus
-        (review 9b: the eager ``local_listing`` re-read every tracked
-        byte on every poll; at 1 TB tracked / one changed file, each
-        tick paid ~1 TB of I/O for one record). Unchanged rows carry
-        NULL content — exactly the ``FtpSource.incremental_fetch``
-        contract the snapshot plan already accepts; its own state join
-        re-derives requires_fetch and never touches content for them."""
-        meta = self.default_meta_listing()
-        prev = self.load_state().select(
-            F.col("path").alias("s_path"),
-            F.col("size").alias("s_size"),
-            F.col("timestamp").alias("s_timestamp"),
-        )
-        tagged = meta.join(prev, meta["path"] == prev["s_path"], "left")
-        needs = (
-            F.col("s_path").isNull()
-            | (F.col("s_size") != F.col("size"))
-            | (F.col("s_timestamp") != F.col("modification_time"))
-        )
-        to_fetch = tagged.filter(needs).select("path", "size", "modification_time")
-        unchanged = tagged.filter(~needs).select(
-            "path",
-            "size",
-            "modification_time",
-            F.lit(None).cast("binary").alias("content"),
-        )
-        return _local_fetch(to_fetch).unionByName(unchanged)
+        """The source's metadata-only listing of the monitored trees."""
+        return self.source.listing(self.spark, self.monitors)
 
     # -- the poll ---------------------------------------------------------
-    def poll(
-        self,
-        listing: DataFrame | None = None,
-        *,
-        now: str | None = None,
-        sink=None,
-        epoch: int = 0,
-    ) -> DataFrame:
+    def poll(self, *, now: str | None = None, sink=None, epoch: int = 0) -> DataFrame:
         """Run one tick; returns the records DataFrame (materialized).
-
-        ``listing`` defaults to scanning the monitors' common base dirs via
-        ``local_listing``; pass an explicit listing for custom sources.
 
         ``sink`` (optional ``Callable[[DataFrame, int], None]``) is invoked
         with the records BEFORE the state commit: if delivery fails, state
@@ -380,48 +308,28 @@ class PollPipeline:
         sink, the caller receives the already-materialized records and the
         state is committed; that mode is for batch/diagnostic use where
         dropping a tick on a crash between commit and consumption is
-        acceptable.
+        acceptable. A tick that fetched no file commits nothing.
         """
         t0 = _time.monotonic()
-        if listing is None:
-            listing = self.default_listing()
-
+        state = self.load_state()
         records, new_state = snapshot(
-            listing,
-            self.load_state(),
+            self.default_listing(),
+            state,
             self.monitors,
+            fetch=partial(self.source.fetch, self.spark),
             max_age_seconds=self.max_age_seconds,
             now=now,
-            drop_empty=self.drop_empty,
             max_files=self.max_files_per_poll,
             # single eager materialization feeding BOTH records and
             # new_state: one listing+fetch per tick, and the committed
             # hash always matches the emitted record
             checkpoint=True,
         )
-        # Delivery BEFORE state commit (at-least-once): if the sink throws,
-        # state stays put and the next tick re-derives the same delta —
-        # snapshot() is deterministic given the old state.
-        if sink is not None:
-            sink(records, epoch)
-        committed = self._commit_state(new_state)
-        # tracked-paths gauge from the COMMITTED files, not a re-scan of
-        # the merge plan (review 9b: the old pre-commit count() re-ran
-        # the whole state merge per tick purely for metrics): a count()
-        # over parquet with no columns required decodes nothing — row
-        # counts come from the row-group metadata, so this is
-        # metadata-priced at any state size. (An Observation on the
-        # commit write was tried and reverted: registering one makes
-        # the session's ObservationManager non-serializable, which
-        # poisons every later closure capturing an ML model summary.)
-        n_tracked = committed.count()
-        # The previous tick's localCheckpoint blocks are reclaimed by the
-        # ContextCleaner once unreferenced — keep only the latest.
-        self._last_records = records
         # Per-tick operational metrics (the connector logs a files-count per
         # poll, FtpMonitor.scala:111; this is the structured form). The
-        # records frame is already materialized by snapshot(), so these
-        # aggregates never re-run the listing or the fetch.
+        # records are already materialized by snapshot(), so this never
+        # re-runs the listing or the fetch. Taken before drop_empty: zero
+        # rows means no file was fetched.
         agg = records.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum(F.length("value")), F.lit(0)).alias("b"),
@@ -429,25 +337,48 @@ class PollPipeline:
                 F.sum(F.when(F.length("value") > 0, 1).otherwise(0)), F.lit(0)
             ).alias("c"),
         ).collect()[0]
+        if self.drop_empty:
+            records = records.filter(F.length("value") > 0)
+        # Delivery BEFORE state commit (at-least-once): if the sink throws,
+        # state stays put and the next tick re-derives the same delta —
+        # snapshot() is deterministic given the old state.
+        if sink is not None:
+            sink(records, epoch)
+        if agg.n:
+            state = self._commit_state(new_state)
+            if self.keep_history:
+                # the history rows come from the version just COMMITTED,
+                # not from new_state's pre-commit lineage: the `carried`
+                # branch of that lineage still references the previous
+                # state version, which bucket_state mode has already
+                # dropped by this point
+                changed = records.filter(F.length("value") > 0).select(
+                    F.col("key_name").alias("path")
+                ).distinct()
+                state.join(changed, "path", "left_semi").write.mode(
+                    "append"
+                ).parquet(os.path.join(self.state_dir, "history"))
+        # else: idle tick, nothing fetched — the current version stands.
+        # Tracked-paths gauge from the committed files, not a re-scan of
+        # the merge plan (review 9b): a count() over parquet with no
+        # columns required decodes nothing — row counts come from the
+        # row-group metadata, so this is metadata-priced at any state
+        # size. (An Observation on the commit write was tried and
+        # reverted: registering one makes the session's
+        # ObservationManager non-serializable, which poisons every later
+        # closure capturing an ML model summary.)
+        n_tracked = state.count()
+        # The previous tick's localCheckpoint blocks are reclaimed by the
+        # ContextCleaner once unreferenced — keep only the latest.
+        self._last_records = records
         self.last_metrics = {
             "epoch": epoch,
-            "n_records": agg.n,
+            "n_records": agg.c if self.drop_empty else agg.n,
             "n_changed": agg.c,
             "bytes_emitted": agg.b,
             "n_tracked_paths": n_tracked,
             "wall_seconds": round(_time.monotonic() - t0, 3),
         }
-        if self.keep_history:
-            changed = records.filter(F.length("value") > 0).select(
-                F.col("key_name").alias("path")
-            ).distinct()
-            # read the history rows back from the version just COMMITTED,
-            # not from new_state's pre-commit lineage: the `carried` branch
-            # of that lineage still references the previous state version,
-            # which bucket_state mode has already dropped by this point
-            self.load_state().join(changed, "path", "left_semi").write.mode(
-                "append"
-            ).parquet(os.path.join(self.state_dir, "history"))
         return records
 
     def state_history(self) -> DataFrame:
@@ -458,17 +389,3 @@ class PollPipeline:
             os.path.join(self.state_dir, "history")
         )
 
-
-def _leaf_glob(pattern: str) -> str:
-    """The file-name segment of a monitor pattern (for pathGlobFilter)."""
-    return pattern.rsplit("/", 1)[-1] or "*"
-
-
-def _glob_base(path: str) -> str:
-    """Longest glob-free directory prefix — ONE definition in
-    ingest/model.py (review 9b; the previous local copy differed only
-    in keeping a trailing slash, which every caller treats as the same
-    directory)."""
-    from kafka_connect_ftp_spark.ingest.model import glob_free_prefix
-
-    return glob_free_prefix(path)

@@ -1,8 +1,9 @@
 """Listing/fetch sources for the ingest engine.
 
-``local`` (in ingest/pipeline.py) uses Spark's binaryFile format; ``ftp``
-adapts a live FTP remote via ftplib into the same LISTING_SCHEMA contract,
-so the snapshot plan is source-agnostic.
+A source has two methods: ``listing(spark, monitors)`` (metadata only)
+and ``fetch(spark, meta)`` (attach content). ``LocalTree`` (in
+ingest/pipeline.py) uses Spark's binaryFile format; ``FtpSource`` adapts
+a live FTP remote via ftplib, so the snapshot plan is source-agnostic.
 """
 
 from kafka_connect_ftp_spark.sources.ftp import FtpSource  # noqa: F401

@@ -9,10 +9,10 @@ its share of files. That removes the reference's single-connection
 bottleneck (SURVEY.md §4 "parallelism: 1") while keeping per-connection
 setup amortized over a partition, not paid per file.
 
-Change detection stays in the snapshot plan: this source only needs to
-fetch files the state join marked as changed — pass ``paths_to_fetch`` to
-skip unchanged bodies (the listing itself never downloads content,
-mirroring FtpMonitor's list-then-filter-then-fetch ordering, :110-119).
+Change detection stays in the snapshot plan: the listing never downloads
+content, and the plan hands ``fetch`` only the files the state join marked
+as changed — FtpMonitor's list-then-filter-then-fetch ordering
+(:110-119).
 """
 
 from __future__ import annotations
@@ -27,22 +27,15 @@ from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from kafka_connect_ftp_spark.ingest.model import (
-    LISTING_SCHEMA,
+    META_SCHEMA,
     MonitoredPath,
     glob_free_prefix,
     glob_to_regex,
-)
-
-_META_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType(), False),
-        T.StructField("size", T.LongType(), False),
-        T.StructField("modification_time", T.TimestampType(), False),
-    ]
+    monitors_regex,
+    walk_roots,
+    with_content,
 )
 
 
@@ -103,13 +96,19 @@ class FtpSource:
                 _quietly_close(ftp)
 
     def listing(self, spark: SparkSession, monitors: Iterable[MonitoredPath]) -> DataFrame:
-        """Metadata-only listing DataFrame (content column = null)."""
-        seen: dict[str, tuple] = {}
-        for m in monitors:
-            for path, size, mtime in self.list_files(m.pattern):
-                seen[path] = (path, size, mtime)
-        meta = spark.createDataFrame(sorted(seen.values()), _META_SCHEMA)
-        return meta.withColumn("content", F.lit(None).cast("binary"))
+        """Metadata-only listing DataFrame (META_SCHEMA): one walk per
+        disjoint monitor base dir, all over one connection, matching the
+        monitors' combined regex."""
+        monitors = list(monitors)
+        rx = re.compile(monitors_regex(monitors))
+        mode = {"mlsd": self._prefer_mlsd}
+        ftp = self._connect()
+        try:
+            rows = [row for root in walk_roots(monitors) for row in _walk(ftp, root, rx, mode=mode)]
+        finally:
+            self._prefer_mlsd = mode["mlsd"]
+            _quietly_close(ftp)
+        return spark.createDataFrame(sorted(rows), META_SCHEMA)
 
     def listing_distributed(
         self,
@@ -191,61 +190,18 @@ class FtpSource:
         subtree_df = spark.createDataFrame(work, "subtree string, rx string")
         walked = (
             subtree_df.repartition(max(1, min(partitions, len(work) or 1)), "subtree")
-            .mapInPandas(walk_partition, _META_SCHEMA)
+            .mapInPandas(walk_partition, META_SCHEMA)
         )
         if root_files:
             walked = walked.unionByName(
-                spark.createDataFrame(sorted(root_files.values()), _META_SCHEMA)
+                spark.createDataFrame(sorted(root_files.values()), META_SCHEMA)
             )
-        return (
-            walked.dropDuplicates(["path"])
-            .withColumn("content", F.lit(None).cast("binary"))
-        )
+        return walked.dropDuplicates(["path"])
 
     # -- fetch (distributed) ----------------------------------------------
-    def incremental_fetch(
-        self,
-        spark: SparkSession,
-        meta: DataFrame,
-        state: DataFrame,
-        max_age_seconds: float | None = None,
-    ) -> DataFrame:
-        """Fetch content ONLY for files the state table marks as new or
-        changed (size/timestamp mismatch — the requiresFetch predicate,
-        FtpMonitor.scala:35-46); unchanged files pass through with null
-        content. The snapshot plan filters them out before touching
-        content, so bytes of unchanged files never cross the wire — the
-        reference's central transfer-saving property (SURVEY.md §4).
-
-        Pass the pipeline's ``max_age_seconds`` so the F1 age filter runs
-        HERE, before any RETR: an aged-out changed file would otherwise be
-        downloaded, then discarded by the snapshot filter, get no state
-        update, and be re-downloaded every tick forever.
-        """
-        if max_age_seconds is not None:
-            meta = meta.filter(
-                F.col("modification_time")
-                >= F.current_timestamp() - F.make_interval(secs=F.lit(max_age_seconds))
-            )
-        prev = state.select(
-            F.col("path").alias("s_path"),
-            F.col("size").alias("s_size"),
-            F.col("timestamp").alias("s_timestamp"),
-        )
-        tagged = meta.join(prev, meta["path"] == prev["s_path"], "left").withColumn(
-            "_needs_fetch",
-            F.col("s_path").isNull()
-            | (F.col("s_size") != F.col("size"))
-            | (F.col("s_timestamp") != F.col("modification_time")),
-        )
-        to_fetch = tagged.filter(F.col("_needs_fetch")).select("path", "size", "modification_time")
-        unchanged = tagged.filter(~F.col("_needs_fetch")).select(
-            "path", "size", "modification_time", F.lit(None).cast("binary").alias("content")
-        )
-        return self.fetch(spark, to_fetch).unionByName(unchanged)
-
     def fetch(self, spark: SparkSession, meta: DataFrame) -> DataFrame:
-        """Attach content to a metadata listing: LISTING_SCHEMA out.
+        """Attach ``content`` to each row of ``meta``; every other column
+        passes through.
 
         Each partition opens one FTP connection and RETRs its files —
         the distributed replacement for FtpMonitor.fetch (:49-67).
@@ -276,10 +232,8 @@ class FtpSource:
                 if ftp is not None:
                     _quietly_close(ftp)
 
-        return (
-            meta.select("path", "size", "modification_time")
-            .repartition(self.fetch_partitions, "path")
-            .mapInPandas(fetch_partition, LISTING_SCHEMA)
+        return meta.repartition(self.fetch_partitions, "path").mapInPandas(
+            fetch_partition, with_content(meta.schema)
         )
 
 

@@ -5,10 +5,12 @@ plus the distributed fetch path and the full snapshot round trip."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 
 from kafka_connect_ftp_spark.ingest.model import MonitoredPath
+from kafka_connect_ftp_spark.ingest.pipeline import PollPipeline
 from kafka_connect_ftp_spark.ingest.snapshot import empty_state, snapshot
 from kafka_connect_ftp_spark.sources.ftp import FtpSource
 
@@ -248,46 +250,135 @@ class CountingFtp(FakeFtp):
         super().retrbinary(cmd, callback)
 
 
-def test_incremental_fetch_skips_unchanged(spark, tmp_path):
-    counter = str(tmp_path / "retrs.log")
-    files = dict(TREE)
+def _counting_source(files, counter, mtimes=None):
+    """An FtpSource over ``files`` whose RETRs append to ``counter``.
+    ``mtimes`` is read at each connect, so a test can move a file's
+    timestamp between ticks."""
 
     def factory():
-        ftp = CountingFtp(files)
+        ftp = CountingFtp(files, mtimes=mtimes)
         ftp._counter_path = counter
         return ftp
 
-    source = FtpSource(host="fake", _client_factory=factory)
-    monitors = [MonitoredPath("/a/dirb/path/", topic="t")]
+    return FtpSource(host="fake", _client_factory=factory)
 
-    meta = source.listing(spark, monitors)
-    listing = source.incremental_fetch(spark, meta, empty_state(spark))
-    records, state = snapshot(listing, empty_state(spark), monitors, now="2024-06-01 12:00:00")
-    assert records.count() == 2
-    # pin state BEFORE clearing the counter: collecting it re-evaluates
-    # the tick-0 pipeline (and its RETRs) one more time
-    state = spark.createDataFrame(state.collect(), state.schema)
-    fetched_tick0 = set(open(counter).read().split())
-    assert fetched_tick0 == {"/a/dirb/path/file3.txt", "/a/dirb/path/file4.csv"}
+
+def _retrs(counter) -> list[str]:
+    """The RETRs since the last call, as a sorted LIST: a file fetched
+    twice shows twice."""
+    if not os.path.exists(counter):
+        return []
+    with open(counter) as fh:
+        got = sorted(fh.read().split())
+    os.remove(counter)
+    return got
+
+
+def test_incremental_fetch_skips_unchanged(spark, tmp_path):
+    counter = str(tmp_path / "retrs.log")
+    files, mtimes = dict(TREE), {}
+    monitors = [MonitoredPath("/a/dirb/path/", topic="t")]
+    pipe = PollPipeline(
+        spark, monitors, str(tmp_path / "state"), drop_empty=True,
+        source=_counting_source(files, counter, mtimes),
+    )
+    assert pipe.poll(now="2024-06-01 12:00:00").count() == 2
+    assert _retrs(counter) == ["/a/dirb/path/file3.txt", "/a/dirb/path/file4.csv"]
 
     # tick 1: only file3 changes (its mtime alone advances); file4 must
     # NOT be RETR'd again
-    open(counter, "w").close()
     files["/a/dirb/path/file3.txt"] = b"three-changed"
-
-    def factory2():
-        ftp = CountingFtp(files, mtimes={"/a/dirb/path/file3.txt": "20240601120100"})
-        ftp._counter_path = counter
-        return ftp
-
-    source2 = FtpSource(host="fake", _client_factory=factory2)
-    meta2 = source2.listing(spark, monitors)
-    listing2 = source2.incremental_fetch(spark, meta2, state)
-    records2, _ = snapshot(listing2, state, monitors, now="2024-06-01 12:01:00", drop_empty=True)
-    got = {(r.key_name, bytes(r.value)) for r in records2.collect()}
+    mtimes["/a/dirb/path/file3.txt"] = "20240601120100"
+    got = {(r.key_name, bytes(r.value)) for r in pipe.poll(now="2024-06-01 12:01:00").collect()}
     assert got == {("/a/dirb/path/file3.txt", b"three-changed")}
-    fetched_tick1 = set(open(counter).read().split())
-    assert fetched_tick1 == {"/a/dirb/path/file3.txt"}
+    assert _retrs(counter) == ["/a/dirb/path/file3.txt"]
+
+
+def test_overlapping_monitors_fetch_each_file_once(spark, tmp_path):
+    counter = str(tmp_path / "retrs.log")
+    files, mtimes = dict(TREE), {}
+    monitors = [
+        MonitoredPath("/a/dirb/path/", topic="all"),
+        MonitoredPath("/a/dir?/path/*.txt", topic="txt"),
+    ]
+    pipe = PollPipeline(
+        spark, monitors, str(tmp_path / "state"),
+        source=_counting_source(files, counter, mtimes),
+    )
+    got = sorted((r.topic, r.key_name) for r in pipe.poll().collect())
+    assert got == [
+        ("all", "/a/dirb/path/file3.txt"),
+        ("all", "/a/dirb/path/file4.csv"),
+        ("txt", "/a/dira/path/file1.txt"),
+        ("txt", "/a/dirb/path/file3.txt"),
+    ]
+    assert _retrs(counter) == [
+        "/a/dira/path/file1.txt", "/a/dirb/path/file3.txt", "/a/dirb/path/file4.csv",
+    ]
+
+    files["/a/dirb/path/file3.txt"] = b"three+"
+    mtimes["/a/dirb/path/file3.txt"] = "20240601120100"
+    got = sorted((r.topic, bytes(r.value)) for r in pipe.poll().collect())
+    assert got == [("all", b"three+"), ("txt", b"three+")]
+    assert _retrs(counter) == ["/a/dirb/path/file3.txt"]
+
+
+def test_max_files_per_poll_fetches_only_the_capped_files(spark, tmp_path):
+    counter = str(tmp_path / "retrs.log")
+    files = {f"/n/f{i}": b"body%d" % i for i in range(3)}
+    mtimes = {f"/n/f{i}": f"2024060112000{i}" for i in range(3)}
+    pipe = PollPipeline(
+        spark, [MonitoredPath("/n/", topic="t")], str(tmp_path / "state"),
+        max_files_per_poll=1, source=_counting_source(files, counter, mtimes),
+    )
+    for i in range(3):  # oldest first, one file per tick
+        assert [r.key_name for r in pipe.poll().collect()] == [f"/n/f{i}"]
+        assert _retrs(counter) == [f"/n/f{i}"]
+    assert pipe.poll().count() == 0
+    assert _retrs(counter) == []
+
+
+def test_aged_out_file_is_never_fetched(spark, tmp_path):
+    counter = str(tmp_path / "retrs.log")
+    recent = (dt.datetime.now() - dt.timedelta(hours=1)).strftime("%Y%m%d%H%M%S")
+    files = {"/m/old": b"old", "/m/new": b"new"}
+    mtimes = {"/m/new": recent}  # /m/old keeps the fake's 2024 default
+    pipe = PollPipeline(
+        spark, [MonitoredPath("/m/", topic="t")], str(tmp_path / "state"),
+        max_age_seconds=2 * 86400, source=_counting_source(files, counter, mtimes),
+    )
+    assert [r.key_name for r in pipe.poll().collect()] == ["/m/new"]
+    assert _retrs(counter) == ["/m/new"]
+    # the old file changes but is still past the max age: never fetched
+    files["/m/old"] = b"old, changed"
+    mtimes["/m/old"] = "20240602120000"
+    assert pipe.poll().count() == 0
+    assert _retrs(counter) == []
+
+
+def test_listing_walks_a_shared_tree_once_over_one_connection(spark):
+    listed, connects = [], []
+
+    class ListCountingFtp(FakeFtp):
+        def mlsd(self, path, facts=()):
+            listed.append(path)
+            return super().mlsd(path, facts)
+
+    def factory():
+        connects.append(1)
+        return ListCountingFtp(dict(TREE))
+
+    monitors = [
+        MonitoredPath("/a/dirb/path/", topic="all"),
+        MonitoredPath("/a/dir?/path/*.txt", topic="txt"),
+    ]
+    meta = FtpSource(host="fake", _client_factory=factory).listing(spark, monitors)
+    assert meta.columns == ["path", "size", "modification_time"]
+    assert sorted(r.path for r in meta.collect()) == [
+        "/a/dira/path/file1.txt", "/a/dirb/path/file3.txt", "/a/dirb/path/file4.csv",
+    ]
+    assert len(connects) == 1
+    assert sorted(listed) == sorted(set(listed))  # every dir listed once
 
 
 def test_tls_connect_uses_ftps_and_prot_p(monkeypatch):

@@ -10,8 +10,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_connect_ftp_spark.ingest.model import MonitoredPath
-from kafka_connect_ftp_spark.ingest.pipeline import PollPipeline, _glob_base
+from kafka_connect_ftp_spark.ingest.model import MonitoredPath, glob_free_prefix
+from kafka_connect_ftp_spark.ingest.pipeline import PollPipeline
 
 
 def write(base, rel, data: bytes, mtime: float):
@@ -149,17 +149,17 @@ def test_topic_routing_per_directory(spark, tree, tmp_path):
 
 
 def test_glob_base():
-    # review 9b: one definition (ingest/model.py glob_free_prefix) —
-    # a trailing-slash base now normalizes to the same directory
-    # without the slash
-    assert _glob_base("/a/b/") == "/a/b"
-    assert _glob_base("/a/dir?/path/*.txt") == "/a"
-    assert _glob_base("/a/b/file.txt") == "/a/b"
+    # one definition (ingest/model.py glob_free_prefix): a
+    # trailing-slash base normalizes to the same directory without the
+    # slash
+    assert glob_free_prefix("/a/b/") == "/a/b"
+    assert glob_free_prefix("/a/dir?/path/*.txt") == "/a"
+    assert glob_free_prefix("/a/b/file.txt") == "/a/b"
 
 
 def test_leaf_glob_pushdown_filters_listing(spark, tree, tmp_path):
-    # only *.csv files should be listed (pathGlobFilter pushes the name
-    # glob into the binaryFile source) — others never fetched
+    # only *.csv files should be listed (the monitors' regex filters the
+    # binaryFile listing) — others never fetched
     write(tree, "data/a.csv", b"a", T0)
     write(tree, "data/b.txt", b"b", T0)
     write(tree, "data/c.csv", b"c", T0)
@@ -293,6 +293,22 @@ def test_poll_metrics_per_tick(spark, tree, tmp_path):
     m = pipe.last_metrics
     assert m["epoch"] == 8 and m["n_changed"] == 0 and m["bytes_emitted"] == 0
     assert m["n_tracked_paths"] == 2
+
+
+def test_idle_poll_commits_no_state_version(spark, tree, tmp_path):
+    state_dir = str(tmp_path / "state")
+    write(tree, "updates/u0", b"v1", T0)
+    pipe = PollPipeline(spark, monitors(tree), state_dir)
+    pipe.poll()
+    before = sorted(os.listdir(state_dir))
+    assert pipe.poll().count() == 0
+    assert sorted(os.listdir(state_dir)) == before
+    assert pipe.last_metrics["n_tracked_paths"] == 1
+    # a restarted pipeline whose first tick is idle counts the state
+    pipe2 = PollPipeline(spark, monitors(tree), state_dir)
+    assert pipe2.poll().count() == 0
+    assert sorted(os.listdir(state_dir)) == before
+    assert pipe2.last_metrics["n_tracked_paths"] == 1
 
 
 def test_poll_reads_only_changed_bytes(spark, tree, tmp_path):
