@@ -6,7 +6,7 @@ idiomatic Spark:
 
 - ``ingest``    — the core change-detection / delta-extraction pipeline
                   (reference FtpMonitor.scala) as declarative DataFrame plans.
-- ``sources``   — file-listing sources: local dirs via ``binaryFile``, an
+- ``sources``   — file-listing sources: local dirs walked on the driver, an
                   ftplib adapter for real FTP remotes.
 - ``operators`` — the analytics operator surface (joins, aggregations,
                   windows, dedup, similarity search, text analysis) designed

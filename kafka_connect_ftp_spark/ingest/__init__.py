@@ -11,7 +11,7 @@ Here the same semantics are one batch plan per poll tick
 of the changed files → delta extraction (binary substring + sha256 prefix
 check) → record projection, plus a merged new-state table.
 ``PollPipeline`` runs it over a listing/fetch source (a local directory
-via Spark's ``binaryFile`` source by default, or ``sources.ftp.FtpSource``)
+tree walked on the driver by default, or ``sources.ftp.FtpSource``)
 with parquet-backed state; ``streaming/ingest_stream.py`` wraps the same
 tick in Structured Streaming.
 """

@@ -11,11 +11,13 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 # One row per file per poll tick — what a directory listing reveals (a
 # source's ``listing``), and with ``content`` what its ``fetch`` adds.
-# Matches Spark's binaryFile columns (path, modificationTime, length, content).
+# The local tree lists what Spark's binaryFile scan would (path,
+# modificationTime, length).
 META_SCHEMA = T.StructType(
     [
         T.StructField("path", T.StringType(), False),
@@ -31,6 +33,35 @@ def with_content(schema: T.StructType) -> T.StructType:
 
 
 LISTING_SCHEMA = with_content(META_SCHEMA)
+
+# A set of paths (a tick's touched or changed files) as a frame.
+PATHS_SCHEMA = T.StructType([META_SCHEMA["path"]])
+
+
+def local_frame(
+    spark: SparkSession, schema: T.StructType, columns: dict[str, list] | None = None
+) -> DataFrame:
+    """Driver-held ``columns`` (name -> values; timestamps as epoch
+    micros) as a frame over a ``LocalRelation``, shipped to the JVM as one
+    Arrow stream. Scanning it runs no Python stage (a ``createDataFrame``
+    of Python rows plans a Python RDD scan instead), and an empty one
+    (``columns`` None) lets the optimizer prune the joins and unions it
+    feeds."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if columns is None:
+        columns = {f.name: [] for f in schema.fields}
+    table = pa.Table.from_pydict(columns, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
+def meta_frame(spark: SparkSession, rows) -> DataFrame:
+    """Listing rows (path, size, modification time in epoch micros) as a
+    META_SCHEMA local relation, sorted by path."""
+    cols = map(list, zip(*sorted(rows)))
+    return local_frame(spark, META_SCHEMA, dict(zip(META_SCHEMA.names, cols)) or None)
+
 
 # The per-path keyed state — field-for-field the reference's Connect offset
 # map (size, timestamp, hash, firstfetched, lastmodified, lastinspected,

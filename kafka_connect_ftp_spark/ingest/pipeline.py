@@ -14,22 +14,33 @@ rows those are — the reference's list-then-filter-then-fetch ordering
 (FtpMonitor.scala:110-119), so per-tick I/O is proportional to the
 delta, not the corpus. ``LocalTree`` (below) is the default source;
 ``sources.ftp.FtpSource`` is the FTP one.
+
+A tick's Spark jobs are few and fixed: the listing is walked on the
+driver into a local relation (no job), one action materializes the
+fetched rows and counts them, the sink delivers, and the next state
+version is written on a second thread while it does. A backfill runs 3
+jobs, a tick with changes 5 (the state join's and the merge's broadcasts
+add one each), an idle tick 2.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import time as _time
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
 from functools import partial
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_connect_ftp_spark.ingest.model import (
-    META_SCHEMA,
+    PATHS_SCHEMA,
     STATE_SCHEMA,
     MonitoredPath,
+    local_frame,
+    meta_frame,
     monitors_regex,
     walk_roots,
     with_content,
@@ -44,12 +55,12 @@ def _local_fetch(meta: DataFrame) -> DataFrame:
     column passes through. A file that vanished between listing and
     read is skipped (the rotated-file rule).
 
-    The rows arrive in the listing scan's partitions: dozens for a tree
-    of small files, since each file counts
-    ``spark.sql.files.openCostInBytes`` toward a scan split. ``coalesce``
-    (no shuffle) merges them to one per core, so the Python fetch and
-    everything downstream of it (sink files, state files) does not pay
-    per-partition overhead for a small delta."""
+    The rows arrive in the state join's partitions: the listing's few
+    when the state is broadcast, up to the shuffle's count when it is
+    too large and the join sort-merges. ``coalesce`` (no shuffle) caps
+    them at one per core, so the Python fetch and everything downstream
+    of it (sink files, state files) does not pay per-partition overhead
+    for a small delta."""
 
     def fetch_partition(batches):
         for pdf in batches:
@@ -67,25 +78,64 @@ def _local_fetch(meta: DataFrame) -> DataFrame:
     return meta.coalesce(cores).mapInPandas(fetch_partition, with_content(meta.schema))
 
 
+def _hidden(name: str) -> bool:
+    """Whether Spark's file sources skip ``name`` when they list a tree
+    (Hadoop's rule, ``HadoopFSUtils.shouldFilterOutPathName``): names
+    starting with ``.`` or with ``_`` (unless a ``k=v`` partition name),
+    and in-flight ``._COPYING_`` uploads — but never parquet's
+    ``_metadata`` / ``_common_metadata`` summaries."""
+    if name.startswith(("_metadata", "_common_metadata")):
+        return False
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def _walk_files(root: str) -> Iterator[tuple[str, int, int]]:
+    """(path, size, modification time in epoch micros truncated to ms)
+    of every file under ``root``; hidden names are neither listed nor
+    descended into. An entry removed while the walk runs is skipped, as
+    if it had gone before the walk."""
+    stack = [root]
+    while stack:
+        try:
+            entries = list(os.scandir(stack.pop()))
+        except FileNotFoundError:
+            continue
+        for entry in entries:
+            if _hidden(entry.name):
+                continue
+            try:
+                if entry.is_dir():
+                    stack.append(entry.path)
+                else:
+                    st = entry.stat()
+                    yield entry.path, st.st_size, st.st_mtime_ns // 1_000_000 * 1000
+            except FileNotFoundError:
+                continue
+
+
 class LocalTree:
     """The local (or driver-mounted shared-FS) directory tree as a source."""
 
     def listing(self, spark: SparkSession, monitors: Sequence[MonitoredPath]) -> DataFrame:
-        """One metadata-only ``binaryFile`` scan over the monitors'
-        disjoint base dirs: ``content`` is pruned from the scan schema,
-        so files are never opened. The monitors' regex is the only
-        filter. A missing monitored dir lists as empty, like FTP LIST on
-        a nonexistent path (FtpFileLister.scala:37-50 None case)."""
-        roots = [r for r in walk_roots(monitors) if os.path.isdir(r)]
-        if not roots:
-            return spark.createDataFrame([], META_SCHEMA)
-        scan = spark.read.format("binaryFile").option("recursiveFileLookup", "true").load(roots)
-        # binaryFile paths are file:-URIs; state keys are plain absolute paths
-        return scan.select(
-            F.regexp_replace(F.col("path"), "^file:", "").alias("path"),
-            F.col("length").alias("size"),
-            F.col("modificationTime").alias("modification_time"),
-        ).filter(F.col("path").rlike(monitors_regex(monitors)))
+        """The monitors' disjoint base dirs, walked on the driver
+        (``os.scandir``) into a local relation: no Spark job and no file
+        opened. It lists what a ``binaryFile`` scan of the dirs with
+        ``recursiveFileLookup`` lists — the same hidden-name rule, mtimes
+        at ms — filtered by the monitors' regex. A missing monitored dir
+        lists as empty, like FTP LIST on a nonexistent path
+        (FtpFileLister.scala:37-50 None case)."""
+        rx = re.compile(monitors_regex(monitors))
+        return meta_frame(spark, (
+            row
+            for root in walk_roots(monitors)
+            if os.path.isdir(root)
+            for row in _walk_files(root)
+            if rx.match(row[0])
+        ))
 
     def fetch(self, spark: SparkSession, meta: DataFrame) -> DataFrame:
         return _local_fetch(meta)
@@ -159,6 +209,10 @@ class PollPipeline:
         # right after the flip, hence the clamp at 2.
         self.keep_versions = max(2, keep_versions)
         self._last_records: DataFrame | None = None
+        # tracked paths in the current state version: counted once, on
+        # this instance's first tick, then advanced by each commit's new
+        # paths
+        self._n_tracked: int | None = None
         self.last_metrics: dict | None = None
         os.makedirs(state_dir, exist_ok=True)
 
@@ -232,15 +286,10 @@ class PollPipeline:
             os.path.join(self.state_dir, version)
         )
 
-    def _commit_state(self, new_state: DataFrame) -> DataFrame:
-        """Write the next state version, flip the marker, prune; returns
-        a frame READING the just-committed files (for metadata-priced
-        post-commit gauges)."""
-        version, prev_version = "v0", None
-        mk = self._read_marker()
-        if mk is not None:
-            prev_version = mk[0]
-            version = f"v{int(prev_version[1:]) + 1}"
+    def _write_version(self, new_state: DataFrame, version: str) -> None:
+        """Write ``new_state`` as state version ``version`` (one job). It
+        is not current until ``_flip``; a version left behind by a tick
+        that failed after writing it is overwritten by the retry."""
         if self.bucket_state:
             # EXTERNAL bucketed table per version — data under
             # state_dir, catalog entry disposable (review 9b: managed
@@ -257,6 +306,9 @@ class PollPipeline:
             )
         else:
             new_state.write.mode("overwrite").parquet(os.path.join(self.state_dir, version))
+
+    def _flip(self, version: str, prev_version: str | None) -> None:
+        """Make ``version`` current — the commit point — then prune."""
         tmp = self._marker + ".tmp"
         with open(tmp, "w") as fh:
             fh.write(version)
@@ -272,18 +324,12 @@ class PollPipeline:
             # dirs age out through the same retention window below.
             self.spark.sql(f"DROP TABLE IF EXISTS {self._table_name(prev_version)}")
         self._prune_versions(current=int(version[1:]))
-        if self.bucket_state:
-            return self.spark.table(self._table_name(version))
-        return self.spark.read.schema(STATE_SCHEMA).parquet(
-            os.path.join(self.state_dir, version)
-        )
 
     def _prune_versions(self, *, current: int) -> None:
         """Delete version dirs (parquet ``vN`` or bucketed
         ``bucket_vN``) older than the retention window. The marker has
         already moved, so anything pruned is unreferenced; a crash
         mid-prune leaves stale dirs, never a missing current."""
-        import re
         import shutil
 
         cutoff = current - self.keep_versions
@@ -304,15 +350,23 @@ class PollPipeline:
         with the records BEFORE the state commit: if delivery fails, state
         is not advanced and the next poll re-emits the same delta — the
         reference's offsets-after-produce ordering (Connect commits offsets
-        only after records are produced; SURVEY.md §2.8 T5). Without a
-        sink, the caller receives the already-materialized records and the
-        state is committed; that mode is for batch/diagnostic use where
-        dropping a tick on a crash between commit and consumption is
-        acceptable. A tick that fetched no file commits nothing.
+        only after records are produced; SURVEY.md §2.8 T5). It is called
+        only for a tick with records, so a replayed tick that re-derives
+        nothing never reaches it. Without a sink, the caller receives the
+        already-materialized records and the state is committed; that
+        mode is for batch/diagnostic use where dropping a tick on a crash
+        between commit and consumption is acceptable. A tick that fetched
+        no file commits nothing.
         """
         t0 = _time.monotonic()
         state = self.load_state()
-        records, new_state = snapshot(
+        mk = self._read_marker()
+        if self._n_tracked is None:
+            # a restart: count the state resumed from, once — a parquet
+            # count() decodes no column, so it is metadata-priced at any
+            # state size
+            self._n_tracked = 0 if mk is None else state.count()
+        records, new_state, stats = snapshot(
             self.default_listing(),
             state,
             self.monitors,
@@ -320,66 +374,75 @@ class PollPipeline:
             max_age_seconds=self.max_age_seconds,
             now=now,
             max_files=self.max_files_per_poll,
-            # single eager materialization feeding BOTH records and
-            # new_state: one listing+fetch per tick, and the committed
-            # hash always matches the emitted record
+            # one action materializes the fetched rows feeding BOTH
+            # records and new_state, and counts them: one listing+fetch
+            # per tick, and the committed hash always matches the
+            # emitted record
             checkpoint=True,
         )
         # Per-tick operational metrics (the connector logs a files-count per
-        # poll, FtpMonitor.scala:111; this is the structured form). The
-        # records are already materialized by snapshot(), so this never
-        # re-runs the listing or the fetch. Taken before drop_empty: zero
-        # rows means no file was fetched.
-        agg = records.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.length("value")), F.lit(0)).alias("b"),
-            F.coalesce(
-                F.sum(F.when(F.length("value") > 0, 1).otherwise(0)), F.lit(0)
-            ).alias("c"),
-        ).collect()[0]
+        # poll, FtpMonitor.scala:111; this is the structured form), counted
+        # before drop_empty: zero records means no file was fetched.
+        n_records = stats.n_changed if self.drop_empty else stats.n_records
         if self.drop_empty:
             records = records.filter(F.length("value") > 0)
-        # Delivery BEFORE state commit (at-least-once): if the sink throws,
-        # state stays put and the next tick re-derives the same delta —
-        # snapshot() is deterministic given the old state.
-        if sink is not None:
-            sink(records, epoch)
-        if agg.n:
-            state = self._commit_state(new_state)
+        if stats.n_records:
+            prev_version = mk[0] if mk else None
+            version = f"v{int(prev_version[1:]) + 1}" if prev_version else "v0"
+            deliver = partial(sink, records, epoch) if sink and n_records else None
+            self._write_while(new_state, version, deliver)
+            self._flip(version, prev_version)
+            self._n_tracked += stats.n_new_paths
             if self.keep_history:
                 # the history rows come from the version just COMMITTED,
                 # not from new_state's pre-commit lineage: the `carried`
                 # branch of that lineage still references the previous
                 # state version, which bucket_state mode has already
                 # dropped by this point
-                changed = records.filter(F.length("value") > 0).select(
-                    F.col("key_name").alias("path")
-                ).distinct()
-                state.join(changed, "path", "left_semi").write.mode(
+                changed = local_frame(self.spark, PATHS_SCHEMA, {"path": stats.changed_paths})
+                self.load_state().join(changed, "path", "left_semi").write.mode(
                     "append"
                 ).parquet(os.path.join(self.state_dir, "history"))
         # else: idle tick, nothing fetched — the current version stands.
-        # Tracked-paths gauge from the committed files, not a re-scan of
-        # the merge plan (review 9b): a count() over parquet with no
-        # columns required decodes nothing — row counts come from the
-        # row-group metadata, so this is metadata-priced at any state
-        # size. (An Observation on the commit write was tried and
-        # reverted: registering one makes the session's
-        # ObservationManager non-serializable, which poisons every later
-        # closure capturing an ML model summary.)
-        n_tracked = state.count()
         # The previous tick's localCheckpoint blocks are reclaimed by the
         # ContextCleaner once unreferenced — keep only the latest.
         self._last_records = records
         self.last_metrics = {
             "epoch": epoch,
-            "n_records": agg.c if self.drop_empty else agg.n,
-            "n_changed": agg.c,
-            "bytes_emitted": agg.b,
-            "n_tracked_paths": n_tracked,
+            "n_records": n_records,
+            "n_changed": stats.n_changed,
+            "bytes_emitted": stats.bytes_emitted,
+            "n_tracked_paths": self._n_tracked,
             "wall_seconds": round(_time.monotonic() - t0, 3),
         }
         return records
+
+    def _write_while(self, new_state: DataFrame, version: str, deliver) -> None:
+        """Write state version ``version`` on a second thread while
+        ``deliver`` (if any) runs; return once both succeeded, else
+        raise. The caller flips the marker only then, so delivery still
+        precedes the commit point: a failed sink leaves the marker where
+        it was and the next tick re-derives and re-delivers the same
+        delta (its orphan version dir is overwritten by that retry), and
+        a failed write after a delivered tick re-delivers it
+        (at-least-once)."""
+        failed: list[BaseException] = []
+
+        def write() -> None:
+            try:
+                self._write_version(new_state, version)
+            except BaseException as err:  # noqa: BLE001 — re-raised below
+                failed.append(err)
+
+        writer = InheritableThread(target=write)
+        writer.start()
+        try:
+            if deliver is not None:
+                deliver()
+        finally:
+            writer.join()
+        if failed:
+            raise failed[0]
 
     def state_history(self) -> DataFrame:
         """All persisted state versions (keep_history=True): one row per

@@ -46,15 +46,35 @@ FtpMonitor.scala:77-80).
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_connect_ftp_spark.ingest.model import STATE_SCHEMA, MonitoredPath, monitors_regex
+from kafka_connect_ftp_spark.ingest.model import (
+    PATHS_SCHEMA,
+    STATE_SCHEMA,
+    MonitoredPath,
+    local_frame,
+    monitors_regex,
+)
 
 
 def empty_state(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], STATE_SCHEMA)
+    """An empty state table as a ``LocalRelation``: a backfill's state
+    join and merge are pruned by the optimizer, not run."""
+    return local_frame(spark, STATE_SCHEMA)
+
+
+class TickStats(NamedTuple):
+    """Counts of one materialized tick, summed on the driver from the
+    rows of the action that materialized it."""
+
+    n_records: int  # records, empty bodies included
+    n_changed: int  # records with a non-empty body
+    bytes_emitted: int  # summed body bytes
+    n_new_paths: int  # fetched paths that had no state row
+    changed_paths: list[str]  # paths with a non-empty record, sorted
 
 
 def snapshot(
@@ -68,8 +88,9 @@ def snapshot(
     drop_empty: bool = False,
     max_files: int | None = None,
     checkpoint: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Process one poll tick. Returns ``(records, new_state)``.
+) -> tuple[DataFrame, DataFrame] | tuple[DataFrame, DataFrame, TickStats]:
+    """Process one poll tick. Returns ``(records, new_state)``, or with
+    ``checkpoint`` ``(records, new_state, stats)``.
 
     ``listing`` has one row per path (path, size, modification_time); a
     listing that also carries ``content`` (LISTING_SCHEMA) needs no
@@ -90,6 +111,14 @@ def snapshot(
     reference's buffer. (In streaming deployments prefer
     ``maxFilesPerTrigger`` on the source; this explicit form exists for
     batch-mode parity and bounded-memory polls.)
+
+    ``checkpoint`` materializes the tick with ONE Spark action before
+    returning: the fetched rows are kept (``localCheckpoint``) and a
+    narrow per-record projection (path, new-or-known, body length) is
+    collected, from which the ``TickStats`` are counted. Both outputs
+    then read the kept rows, so neither re-lists nor re-fetches, and
+    ``new_state``'s merge takes the tick's fetched paths as a local
+    relation.
     """
     if not monitors:
         raise ValueError("at least one MonitoredPath is required")
@@ -151,12 +180,13 @@ def snapshot(
     )
 
     if checkpoint:
-        # Materialize the fetched per-path frame ONCE before deriving both
-        # outputs: records and new_state otherwise share un-materialized
-        # lineage, so a caller that actions both re-lists and re-fetches
-        # every changed file (2x RETR per tick in FTP mode) — and a file
+        # Keep the fetched per-path rows when they are first computed
+        # (the stats action below) and derive both outputs from them:
+        # records and new_state otherwise share un-materialized lineage,
+        # so a caller that actions both re-lists and re-fetches every
+        # changed file (2x RETR per tick in FTP mode) — and a file
         # changing between the two scans would commit a hash the emitted
-        # record never saw. Eager localCheckpoint also truncates the plan,
+        # record never saw. The checkpoint also truncates the plan,
         # which keeps long-running poll loops' plans from growing.
         # Durability note (review 9b): localCheckpoint blocks live on
         # EXECUTORS — under dynamic allocation / spot reclamation a lost
@@ -165,7 +195,7 @@ def snapshot(
         # is lost, but the tick is). Deployments that cannot retry a
         # tick should set a reliable spark checkpoint dir and swap this
         # for df.checkpoint().
-        per_path = per_path.localCheckpoint(eager=True)
+        per_path = per_path.localCheckpoint(eager=False)
 
     # S5/U1: one row per (path, matching monitor), tagged with its topic
     # and mode — the reference processes each MonitoredPath
@@ -223,7 +253,23 @@ def snapshot(
     # last-write-wins merge: updated rows replace prior state; untouched
     # state (unfetched or unlisted paths) carries over — the reference
     # never deletes state (ConnectFileMetaDataStore.scala:26)
-    carried = state.join(updates.select("path"), "path", "left_anti")
-    new_state = carried.unionByName(updates)
+    if not checkpoint:
+        carried = state.join(updates.select("path"), "path", "left_anti")
+        return records, carried.unionByName(updates)
 
-    return records, new_state
+    # The tick's one materializing action: a JVM-only projection over
+    # the fetch, a row per record, collected. It fills the checkpoint
+    # and yields every count the caller needs, so no second job
+    # aggregates the records or counts the state.
+    rows = tagged.select("path", known.alias("known"), F.length(body).alias("n")).collect()
+    paths = sorted({r.path for r in rows})
+    stats = TickStats(
+        n_records=len(rows),
+        n_changed=sum(1 for r in rows if r.n),
+        bytes_emitted=sum(r.n for r in rows),
+        n_new_paths=len({r.path for r in rows if not r.known}),
+        changed_paths=sorted({r.path for r in rows if r.n}),
+    )
+    touched = local_frame(listing.sparkSession, PATHS_SCHEMA, {"path": paths})
+    carried = state.join(touched, "path", "left_anti")
+    return records, carried.unionByName(updates), stats

@@ -2,7 +2,7 @@
 
 A source has two methods: ``listing(spark, monitors)`` (metadata only)
 and ``fetch(spark, meta)`` (attach content). ``LocalTree`` (in
-ingest/pipeline.py) uses Spark's binaryFile format; ``FtpSource`` adapts
+ingest/pipeline.py) walks a local tree on the driver; ``FtpSource`` adapts
 a live FTP remote via ftplib, so the snapshot plan is source-agnostic.
 """
 

@@ -27,12 +27,14 @@ from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from kafka_connect_ftp_spark.ingest.model import (
     META_SCHEMA,
     MonitoredPath,
     glob_free_prefix,
     glob_to_regex,
+    meta_frame,
     monitors_regex,
     walk_roots,
     with_content,
@@ -108,7 +110,7 @@ class FtpSource:
         finally:
             self._prefer_mlsd = mode["mlsd"]
             _quietly_close(ftp)
-        return spark.createDataFrame(sorted(rows), META_SCHEMA)
+        return _meta_frame(spark, rows)
 
     def listing_distributed(
         self,
@@ -193,9 +195,7 @@ class FtpSource:
             .mapInPandas(walk_partition, META_SCHEMA)
         )
         if root_files:
-            walked = walked.unionByName(
-                spark.createDataFrame(sorted(root_files.values()), META_SCHEMA)
-            )
+            walked = walked.unionByName(_meta_frame(spark, root_files.values()))
         return walked.dropDuplicates(["path"])
 
     # -- fetch (distributed) ----------------------------------------------
@@ -235,6 +235,15 @@ class FtpSource:
         return meta.repartition(self.fetch_partitions, "path").mapInPandas(
             fetch_partition, with_content(meta.schema)
         )
+
+
+def _meta_frame(spark: SparkSession, rows: Iterable[tuple]) -> DataFrame:
+    """Listing rows (path, size, datetime) as a local relation. Each
+    datetime converts as ``createDataFrame`` of the rows would convert it
+    (``TimestampType.toInternal``: naive means the driver's local time),
+    but no Python stage scans the result."""
+    ts = T.TimestampType()
+    return meta_frame(spark, ((path, size, ts.toInternal(m)) for path, size, m in rows))
 
 
 def _retr(ftp: ftplib.FTP, path: str) -> bytes:

@@ -31,6 +31,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from kafka_connect_ftp_spark.ingest.pipeline import PollPipeline
 from kafka_connect_ftp_spark.streaming.backoff import ExponentialBackOff
@@ -46,25 +47,29 @@ def parquet_sink(out_dir: str) -> Sink:
 
 
 def idempotent_parquet_sink(out_dir: str) -> Sink:
-    """Exactly-once-per-epoch file sink: each epoch writes (overwrite) its
-    own ``epoch=N`` partition directory, so a replayed tick after a crash
-    rewrites the same partition instead of duplicating records — the
-    foreachBatch idempotence pattern that upgrades at-least-once delivery
-    (reference T5, SURVEY.md §2.8) to effectively-once for file targets.
-    Readers load ``out_dir`` with partition discovery and see each epoch
-    once."""
+    """Exactly-once-per-epoch file sink: each epoch's records land in
+    their own ``epoch=N`` partition of ``out_dir``, written with dynamic
+    partition overwrite, so a replayed tick after a crash rewrites the
+    same partition instead of duplicating records — the foreachBatch
+    idempotence pattern that upgrades at-least-once delivery (reference
+    T5, SURVEY.md §2.8) to effectively-once for file targets. Readers
+    load ``out_dir`` with partition discovery and see each epoch once.
+
+    A dynamic overwrite replaces only the partitions the write fills, so
+    an EMPTY frame leaves ``epoch=N`` as it was: a replay that re-derives
+    an empty delta (the crash hit after the state commit, before the
+    engine committed the micro-batch) keeps the rows the original
+    attempt delivered, with no job spent probing for emptiness.
+    ``PollPipeline.poll`` calls a sink only for a tick with records."""
 
     def write(records: DataFrame, epoch: int) -> None:
-        # Replay guard: if a crash hit AFTER the state commit but BEFORE
-        # the engine committed the micro-batch, the replayed tick
-        # re-derives an EMPTY delta — overwriting would erase the rows
-        # the original attempt already delivered. Skipping empty frames
-        # is correct in both worlds: a genuinely empty epoch has nothing
-        # to write (and no pre-existing partition to leave stale), a
-        # replayed one keeps the original rows.
-        if records.isEmpty():
-            return
-        records.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch}")
+        (
+            records.withColumn("epoch", F.lit(epoch))
+            .write.partitionBy("epoch")
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(out_dir)
+        )
 
     return write
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 
 import pytest
 
@@ -237,6 +238,39 @@ def test_distributed_listing_matches_driver_walk(spark, src):
     want = {(r.path, r.size) for r in driver_side.collect()}
     got = {(r.path, r.size) for r in distributed.collect()}
     assert got == want and len(got) == 3
+
+
+def test_listing_frames_are_local_relations_equal_to_list_built_frames(spark):
+    """Both listing frames are Arrow-built local relations (no Python
+    stage scans them), and collect to exactly the rows — timestamps
+    included — that ``createDataFrame`` of the walked tuples gives."""
+    from kafka_connect_ftp_spark.ingest.model import META_SCHEMA
+    from kafka_connect_ftp_spark.sources.ftp import _walk
+
+    files = dict(TREE, **{"/a/root.txt": b"r", "/a/zz.txt": b"zz"})
+    mtimes = {
+        "/a/dira/path/file1.txt": "20240229235959",
+        "/a/root.txt": "19991231000001",
+        "/a/zz.txt": "20300101120000",
+    }
+    source = FtpSource(host="fake", _client_factory=lambda: FakeFtp(files, mtimes=mtimes))
+    monitors = [MonitoredPath("/a/**", topic="t")]
+
+    def list_built(rows):
+        return spark.createDataFrame(sorted(rows), META_SCHEMA).collect()
+
+    walked = list(_walk(FakeFtp(files, mtimes=mtimes), "/a", re.compile(r".*")))
+    listing = source.listing(spark, monitors)
+    assert "LocalRelation" in listing._jdf.queryExecution().optimizedPlan().toString()
+    assert listing.collect() == list_built(walked)
+
+    # listing_distributed's root-level files: the driver-side part
+    distributed = source.listing_distributed(spark, monitors, partitions=2)
+    roots = [r for r in walked if r[0].count("/") == 2]
+    assert [r.path for r in list_built(roots)] == ["/a/root.txt", "/a/zz.txt"]
+    got = {r.path: r for r in distributed.collect()}
+    assert [got[r.path] for r in list_built(roots)] == list_built(roots)
+    assert sorted(got.values()) == sorted(list_built(walked))
 
 
 class CountingFtp(FakeFtp):

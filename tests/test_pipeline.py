@@ -1,5 +1,5 @@
 """End-to-end PollPipeline tests against a real directory tree mutated
-between polls — the binaryFile-source analog of the reference's embedded
+between polls — the local-tree analog of the reference's embedded
 FTP server test (EndToEnd.scala:31-59), including restart/recovery from
 the persisted state table (SURVEY.md §3.3)."""
 
@@ -159,7 +159,7 @@ def test_glob_base():
 
 def test_leaf_glob_pushdown_filters_listing(spark, tree, tmp_path):
     # only *.csv files should be listed (the monitors' regex filters the
-    # binaryFile listing) — others never fetched
+    # driver's walk of the tree) — others never fetched
     write(tree, "data/a.csv", b"a", T0)
     write(tree, "data/b.txt", b"b", T0)
     write(tree, "data/c.csv", b"c", T0)
@@ -385,3 +385,148 @@ def test_quoted_state_dir_rejected(spark, tmp_path):
     bad = str(tmp_path / "it's-state")
     with pytest.raises(ValueError, match="single quote"):
         PollPipeline(spark, monitors(str(tmp_path)), bad)
+
+
+def test_local_listing_matches_binary_file_scan(spark, tree, tmp_path):
+    """The driver walk lists exactly the (path, size, modification_time)
+    rows of a recursive ``binaryFile`` scan of the same roots — Spark's
+    hidden-name rule (``.``/``_`` prefixes unless ``_k=v``, in-flight
+    ``._COPYING_`` files, hidden dirs not descended) and ms mtimes — and
+    a missing root lists as empty."""
+    from kafka_connect_ftp_spark.ingest.pipeline import LocalTree
+
+    names = [
+        "a.csv", ".h.csv", "_u.csv", "_k=v.csv", "k=v.csv", "f.csv._COPYING_",
+        ".hd/x.csv", "_ud/y.csv", "d/z.csv", "d/e/w.csv", "d/_s.csv", "_k=v/q.csv",
+    ]
+    for i, rel in enumerate(names):
+        write(tree, rel, b"x" * (i + 1), T0 + i)
+    # sub-ms mtime precision must truncate, not round
+    os.utime(os.path.join(tree, "a.csv"), ns=(0, int(T0 * 1e9) + 987_654_321))
+    monitors = [
+        MonitoredPath(f"{tree}/**", topic="all"),
+        MonitoredPath(f"{tmp_path}/missing/", topic="none"),
+    ]
+
+    got = LocalTree().listing(spark, monitors)
+    assert "LocalRelation" in got._jdf.queryExecution().optimizedPlan().toString()
+    oracle = (
+        spark.read.format("binaryFile").option("recursiveFileLookup", "true").load([tree])
+        .select(
+            F.regexp_replace("path", "^file:", "").alias("path"),
+            F.col("length").alias("size"),
+            F.col("modificationTime").alias("modification_time"),
+        )
+    )
+    want = sorted(oracle.collect())
+    assert sorted(got.collect()) == want
+    listed = sorted(os.path.relpath(r.path, tree) for r in want)
+    assert listed == ["_k=v.csv", "_k=v/q.csv", "a.csv", "d/e/w.csv", "d/z.csv", "k=v.csv"]
+
+
+def _jobs(spark, fn):
+    """Spark jobs ``fn`` runs, threads it starts included (they inherit
+    the job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_poll_job_budget(spark, tree, tmp_path):
+    """A tick's Spark jobs: the listing is a driver walk, one action
+    materializes the fetch and counts it, the sink delivers, the state
+    version is written alongside. A backfill has no state to join or
+    merge; an idle tick writes nothing."""
+    from kafka_connect_ftp_spark.streaming.ingest_stream import idempotent_parquet_sink
+
+    for i in range(6):
+        write(tree, f"tails/t{i}", b"line %d\n" % i, T0)
+        write(tree, f"updates/u{i}", b"v%d" % i, T0)
+    pipe = PollPipeline(spark, monitors(tree), str(tmp_path / "state"))
+    sink = idempotent_parquet_sink(str(tmp_path / "out"))
+
+    backfill = _jobs(spark, lambda: pipe.poll(sink=sink, epoch=0))
+    write(tree, "tails/t0", b"line 0\nline 0b\n", T0 + 60)
+    write(tree, "updates/u1", b"v1!", T0 + 60)
+    write(tree, "updates/new", b"n", T0 + 60)
+    changes = _jobs(spark, lambda: pipe.poll(sink=sink, epoch=1))
+    idle = _jobs(spark, lambda: pipe.poll(sink=sink, epoch=2))
+
+    assert pipe.last_metrics["n_tracked_paths"] == 13
+    print(f"jobs per tick: backfill {backfill}, changes {changes}, idle {idle}")
+    assert backfill <= 4
+    assert changes <= 5
+    assert idle <= 2
+
+
+@pytest.mark.parametrize("bucket_state", [None, 4])
+def test_sink_failure_during_state_write_commits_nothing(spark, tree, tmp_path, bucket_state):
+    """The sink raises while the next state version is being written:
+    the marker stays, the tracked-path gauge stays, and the retry tick
+    re-emits the same records and commits its own write of that version
+    over the orphan."""
+    import time
+
+    state_dir = str(tmp_path / "state")
+    write(tree, "updates/u0", b"v1", T0)
+    write(tree, "updates/u1", b"w1", T0)
+    pipe = PollPipeline(
+        spark, [MonitoredPath(f"{tree}/updates/", topic="u")], state_dir,
+        drop_empty=True, bucket_state=bucket_state,
+    )
+    try:
+        pipe.poll(now="2024-06-01 12:00:00")
+        marker = os.path.join(state_dir, "CURRENT")
+        with open(marker) as fh:
+            committed = fh.read()
+        before = sorted(pipe.load_state().collect())
+        assert pipe.last_metrics["n_tracked_paths"] == 2
+
+        write(tree, "updates/u0", b"v2!", T0 + 60)
+        write(tree, "updates/u2", b"new", T0 + 60)
+        orphan = os.path.join(state_dir, "bucket_v1" if bucket_state else "v1")
+        seen = []
+
+        def failing_sink(records, epoch):
+            seen.extend(sorted((r.key_name, bytes(r.value)) for r in records.collect()))
+            deadline = time.monotonic() + 30
+            while not os.path.exists(orphan) and time.monotonic() < deadline:
+                time.sleep(0.01)
+            assert os.path.exists(orphan)  # the write is under way
+            raise RuntimeError("broker down")
+
+        with pytest.raises(RuntimeError, match="broker down"):
+            pipe.poll(sink=failing_sink, epoch=1, now="2024-06-01 12:01:00")
+        with open(marker) as fh:
+            assert fh.read() == committed
+        assert sorted(pipe.load_state().collect()) == before
+        assert pipe.last_metrics["n_tracked_paths"] == 2
+
+        delivered = []
+        pipe.poll(
+            sink=lambda df, epoch: delivered.extend(
+                sorted((r.key_name, bytes(r.value)) for r in df.collect())
+            ),
+            epoch=1, now="2024-06-01 12:02:00",
+        )
+        assert delivered == seen and [v for _, v in delivered] == [b"v2!", b"new"]
+        assert pipe.last_metrics["n_tracked_paths"] == 3
+        with open(marker) as fh:
+            assert fh.read().split("\n")[0] == "v1"
+        # the current v1 is the retry's write, not the failed tick's
+        state = {r.path.rsplit("/", 1)[-1]: r for r in pipe.load_state().collect()}
+        assert sorted(state) == ["u0", "u1", "u2"]
+        assert str(state["u0"].last_inspected) == "2024-06-01 12:02:00"
+        assert pipe.poll().count() == 0
+    finally:
+        for t in spark.catalog.listTables():
+            if t.name.startswith(pipe._table_name("v").rstrip("v")):
+                spark.sql(f"DROP TABLE IF EXISTS {t.name}")

@@ -98,9 +98,14 @@ def test_streaming_ingest_emits_and_picks_up_changes(spark, tmp_path):
 
 
 def test_streaming_ingest_survives_poll_failure(spark, tmp_path):
+    # poll() calls the sink only for a tick with records: one file whose
+    # delivery keeps failing is re-emitted, and fails, on every tick
+    base = tmp_path / "ftp"
+    base.mkdir()
+    (base / "f0").write_bytes(b"payload")
     pipe = PollPipeline(
         spark,
-        [MonitoredPath(str(tmp_path / "missing") + "/", topic="t")],
+        [MonitoredPath(str(base) + "/", topic="t")],
         str(tmp_path / "state"),
     )
 
