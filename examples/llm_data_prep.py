@@ -437,7 +437,8 @@ def main() -> int:
 
     # 9. retrieval-side coda: compress + index the embeddings table with
     # the faiss-style IVF-PQ funnel (coarse cells prune WHAT is scanned,
-    # PQ codes shrink what the scan reads, exact rerank restores
+    # PQ codes of each vector's residual against its cell shrink what the
+    # scan reads, exact rerank restores
     # precision on the shortlist) — through the MATERIALIZED index, the
     # production shape: train + encode + write once, then every search
     # scans only the probed cells' code partitions (vector-free) and
@@ -446,13 +447,13 @@ def main() -> int:
     from kafka_connect_ftp_spark.operators.pq import (
         ivf_pq_search_indexed,
         read_ivf_pq_index,
-        train_pq,
+        train_ivf_pq,
         write_ivf_pq_index,
     )
 
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     index = build_ivf(emb, k=8, seed=42)
-    codebook = train_pq(emb, m=4, ksub=16, seed=42)
+    codebook = train_ivf_pq(index, m=4, ksub=16, seed=42)
     index_dir = os.path.join(tempfile.mkdtemp(prefix="llm_prep_"), "ivf_pq")
     write_ivf_pq_index(index, codebook, index_dir)
     codes, vectors, centroids, cb = read_ivf_pq_index(spark, index_dir)

@@ -37,20 +37,48 @@ Spark mapping:
   ENTIRE encode → ADC → top-k pipeline inside the driver's hash gate
   (same pattern as ann_ivf_label vs ann_ivf_kmeans: deterministic
   stand-in under the gate, trained path pinned by recall tests).
+- **IVF-PQ is IVFADC** (Jégou et al. §IV, faiss IVFPQ's default):
+  the codebook is trained on, and encodes, the RESIDUAL
+  ``x - centroids[cell]`` of each vector against its coarse cell
+  (``train_ivf_pq`` / ``ivf_pq_encode``), so the ``ksub`` centroids
+  per subspace resolve position INSIDE a cell instead of re-learning the
+  cells themselves. A raw-space codebook on a clustered corpus spends
+  its centroids on the cluster centres and leaves a whole cell sharing
+  a handful of codes, which ADC cannot rank. The coarse centroids are
+  shipped once as data, never folded into expressions (k x dim
+  literals would not plan at k=4096): training joins a broadcast
+  ``(cell, centroid)`` frame and subtracts with ``zip_with``, encoding
+  subtracts in numpy inside the Arrow encoder. A ``train_ivf_pq``
+  codebook carries the coarse centroids it was fit against
+  (``PqCodebook.coarse``); every IVF-PQ entry point REFUSES a raw
+  ``train_pq`` codebook, or one fit to another quantizer, instead of
+  silently encoding residuals with it.
 - **ivf_pq_search** composes the two: probe the nprobe nearest IVF
   cells, rank candidates by ADC, exact-rerank only the top ``rerank``
-  — the faiss-style funnel. At nprobe=k with rerank >= candidates it
-  is provably exact (both stages degenerate to exhaustive).
+  — the faiss-style funnel. ADC against residual codes needs one m x
+  ksub table per probed cell, built driver-side from the residual
+  query ``query - centroids[c]``; the ``nprobe`` tables ride a small
+  broadcast ``(cell, table)`` frame joined on ``cell``, so the lookup
+  stays m ``element_at`` calls whatever nprobe and ksub are (no Python,
+  no shuffle of the scanned rows). At nprobe=k with rerank >=
+  candidates it is provably exact (both stages degenerate to
+  exhaustive).
 
 Ties: every argmin resolves to the LOWEST centroid index
 (``array_position`` returns the first match; the oracle's window rank
-orders by (dist, c)), so encodings are engine- and partitioning-
-independent.
+orders by (dist, c)), so encoding a vector against a given codebook is
+engine- and partitioning-independent. (The TRAINED codebooks of
+``train_pq``/``train_ivf_pq`` are KMeans fits, deterministic only for
+a fixed seed and input partitioning.)
+
+Flat PQ (``train_pq``, ``pq_encode``, ``pq_encode_arrow``,
+``pq_adc_search``, ``codebook_from_*``) stays on raw vectors: there is
+no coarse cell to take a residual against.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -67,6 +95,9 @@ class PqCodebook:
     m: int  # subspaces
     dsub: int  # dims per subspace
     centroids: list[list[list[float]]]  # [m][ksub][dsub]
+    # IVFADC: the coarse centroids whose residuals this codebook was fit
+    # on (set by train_ivf_pq); None = a raw-space, flat-PQ codebook
+    coarse: list[list[float]] | None = None
 
     @property
     def ksub(self) -> int:
@@ -147,6 +178,43 @@ def train_pq(
     return PqCodebook(m=m, dsub=dsub, centroids=cents)
 
 
+def train_ivf_pq(index, *, m: int, ksub: int, seed: int = 42) -> PqCodebook:
+    """The IVFADC codebook of an :class:`~.ann.IvfIndex`: ``train_pq``'s
+    per-subspace KMeans over the residuals ``v - centroids[cell]`` of
+    ``index.assigned``, marked with the coarse centroids it was fit
+    against. It is the only codebook ``ivf_pq_encode``,
+    ``write_ivf_pq_index`` and the ``ivf_pq_search*`` funnels accept.
+    The residual is a broadcast join of the ``(cell, centroid)`` frame
+    plus one ``zip_with`` — the centroids ship once as data.
+    Deterministic for a fixed seed + input partitioning, like
+    ``train_pq``."""
+    spark = index.assigned.sparkSession
+    cents = spark.createDataFrame(
+        list(enumerate(index.centroids)), "cell int, _c array<double>"
+    )
+    resid = index.assigned.join(F.broadcast(cents), "cell").select(
+        F.zip_with("v", "_c", lambda x, c: x - c).alias("r")
+    )
+    cb = train_pq(resid, m=m, ksub=ksub, seed=seed, vec_col="r")
+    return replace(cb, coarse=index.centroids)
+
+
+def _check_ivfadc(codebook: PqCodebook, centroids: list[list[float]]) -> None:
+    """IVF-PQ codes are residuals: refuse a codebook that
+    :func:`train_ivf_pq` did not fit against THESE coarse centroids — a
+    raw-space one would rank by ADC without an error and lose recall."""
+    if codebook.coarse is None:
+        raise ValueError(
+            "IVF-PQ needs a residual codebook from train_ivf_pq(index, ...);"
+            " got a raw-space (flat PQ) codebook"
+        )
+    if codebook.coarse is not centroids and codebook.coarse != centroids:
+        raise ValueError(
+            "the codebook was fit to the residuals of different coarse"
+            " centroids than this index's"
+        )
+
+
 def _arr_lit(vals: list[float]) -> str:
     return "array({})".format(", ".join(f"CAST({x!r} AS DOUBLE)" for x in vals))
 
@@ -210,17 +278,26 @@ def pq_encode_arrow(
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """Same output as :func:`pq_encode` (+ any ``passthrough`` columns
-    carried verbatim), argmin as one BLAS matmul per Arrow batch per
-    subspace — the path for ksub in the hundreds, where m*ksub folded
-    expressions would overwhelm codegen. numpy argmin returns the first
-    minimum, preserving the lowest-index tie rule. ``passthrough`` is
-    what lets the index writer keep the cell id alongside the code in
-    ONE map-side pass instead of re-joining on vec_id afterwards.
+    carried verbatim; ``v`` there is the encoded vector itself), argmin
+    as one BLAS matmul per Arrow batch per subspace — the path for ksub
+    in the hundreds, where m*ksub folded expressions would overwhelm
+    codegen. numpy argmin returns the first minimum, preserving the
+    lowest-index tie rule. ``passthrough`` is what lets the index
+    writer keep the cell id alongside the code in ONE map-side pass
+    instead of re-joining on vec_id afterwards.
 
     NaN policy: identical to :func:`pq_encode` — NULL vectors / NaN or
     NULL elements raise (numpy coerces None to NaN, so one isnan check
     covers both), keeping the two test-pinned-equal paths equal on bad
     input too."""
+    return _encode_arrow(df, codebook, vec_col, id_col, passthrough, coarse=None)
+
+
+def _encode_arrow(df, codebook, vec_col, id_col, passthrough, coarse):
+    """:func:`pq_encode_arrow`'s body; with ``coarse`` (IVFADC, ``cell``
+    in ``passthrough``) each vector is encoded as its residual
+    ``v - coarse[cell]``, subtracted in numpy so the centroids ship
+    once, in the closure."""
     cents = [[list(c) for c in sub] for sub in codebook.centroids]
     m, dsub = codebook.m, codebook.dsub
     extra = list(passthrough)
@@ -231,6 +308,7 @@ def pq_encode_arrow(
 
         cb = [np.asarray(sub, dtype=np.float64) for sub in cents]  # [m](ksub, dsub)
         cb_sq = [np.sum(c * c, axis=1) for c in cb]
+        ctr = None if coarse is None else np.asarray(coarse, dtype=np.float64)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -239,6 +317,8 @@ def pq_encode_arrow(
             x = np.asarray(pdf["v"].tolist(), dtype=np.float64)  # (n, d)
             if np.isnan(x).any():
                 raise ValueError("pq_encode_arrow: NaN/NULL vector element")
+            if ctr is not None:
+                x = x - ctr[pdf["cell"].to_numpy()]
             out = np.empty((len(pdf), m), dtype=np.int32)
             for j in range(m):
                 sub = x[:, j * dsub : (j + 1) * dsub]
@@ -253,11 +333,29 @@ def pq_encode_arrow(
     base = df.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("v"),
-        *extra,
+        *(c for c in extra if c != "v"),
     )
     fields = [f"vec_id {base.schema['vec_id'].dataType.simpleString()}", "code array<int>"]
     fields += [f"{c} {base.schema[c].dataType.simpleString()}" for c in extra]
     return base.mapInPandas(encode, ", ".join(fields))
+
+
+def ivf_pq_encode(
+    index, codebook: PqCodebook, *, keep_vectors: bool = True
+) -> DataFrame:
+    """The IVFADC encoding of an :class:`~.ann.IvfIndex`:
+    ``(vec_id, code, v, cell)``, where ``code`` encodes the residual
+    ``v - centroids[cell]`` against a :func:`train_ivf_pq` codebook (any
+    other raises) — the frame ``ivf_pq_search`` takes. ONE map-side
+    pass through the BLAS Arrow encoder, which subtracts the cell's
+    centroid in numpy and lets ``v`` and ``cell`` ride through.
+    ``keep_vectors=False`` drops ``v`` from the output (``(vec_id,
+    code, cell)``): the index writer's codes table never reads it."""
+    _check_ivfadc(codebook, index.centroids)
+    extra = ("v", "cell") if keep_vectors else ("cell",)
+    return _encode_arrow(
+        index.assigned, codebook, "v", "vec_id", extra, coarse=index.centroids
+    )
 
 
 def adc_table(codebook: PqCodebook, query: list[float]) -> list[list[float]]:
@@ -282,17 +380,57 @@ def adc_table(codebook: PqCodebook, query: list[float]) -> list[list[float]]:
     return out
 
 
+def _adc_sum(m: int, table_j, code_col: str) -> Column:
+    """``sum_j table_j(j)[code_j]`` left to right — THE ADC lookup;
+    ``table_j(j)`` is subspace j's ksub-array as a column."""
+    dist = None
+    for j in range(m):
+        term = F.element_at(table_j(j), F.element_at(code_col, j + 1) + 1)
+        dist = term if dist is None else dist + term
+    return dist
+
+
 def adc_dist_col(codebook: PqCodebook, query: list[float], code_col: str = "code") -> Column:
     """The ADC approximate squared distance as a pure column expression:
     m constant-array lookups summed — no Python, no join, no shuffle."""
     table = adc_table(codebook, query)
-    dist = None
-    for j in range(codebook.m):
-        term = F.element_at(
-            F.expr(_arr_lit(table[j])), F.element_at(code_col, j + 1) + 1
-        )
-        dist = term if dist is None else dist + term
-    return dist
+    return _adc_sum(codebook.m, lambda j: F.expr(_arr_lit(table[j])), code_col)
+
+
+def ivf_adc_scored(
+    frame: DataFrame,
+    codebook: PqCodebook,
+    centroids: list[list[float]],
+    probe: list[int],
+    query: list[float],
+) -> DataFrame:
+    """The rows of ``frame`` (residual ``code`` + ``cell``) in the
+    probed cells, with their IVFADC approximate squared distance
+    ``_adc``: ADC against the table of the residual query
+    ``query - centroids[c]`` of the row's cell c. The ``nprobe`` m x
+    ksub tables are data — one small ``(cell, table)`` frame, broadcast
+    and joined on ``cell`` — so the lookup is m ``element_at`` calls
+    however large nprobe and ksub are; no Python, no shuffle of
+    ``frame``. (Literal tables do not scale: a CASE over nprobe literal
+    tables fails codegen at m=16, ksub=256, nprobe=16, and even one
+    constant-folded array literal is printed into every rendering of
+    the plan — 20 MB there.) Refuses a codebook :func:`train_ivf_pq`
+    did not fit to ``centroids``."""
+    _check_ivfadc(codebook, centroids)
+    tables = frame.sparkSession.createDataFrame(
+        [
+            # strict: a query of the wrong dim raises instead of truncating
+            (c, adc_table(codebook, [q - x for q, x in zip(query, centroids[c], strict=True)]))
+            for c in probe
+        ],
+        "cell int, _t array<array<double>>",
+    )
+    return (
+        frame.filter(F.col("cell").isin(probe))
+        .join(F.broadcast(tables), "cell")
+        .withColumn("_adc", _adc_sum(codebook.m, lambda j: F.element_at("_t", j + 1), "code"))
+        .drop("_t")
+    )
 
 
 def pq_adc_search(
@@ -326,19 +464,21 @@ def ivf_pq_search(
     rerank: int = 100,
 ) -> DataFrame:
     """The faiss-style IVF-PQ funnel over a ``(vec_id, v, cell, code)``
-    frame (an :class:`~.ann.IvfIndex` ``assigned`` joined with its PQ
-    codes): probe the ``nprobe`` nearest cells, rank candidates by ADC
-    (codes only), exact-rerank the best ``rerank`` by true cosine.
-    Returns ``(vec_id, cell, cos_sim)`` best-first. At nprobe = n_cells
-    and rerank >= the candidate count this is provably exact — the
+    frame (:func:`ivf_pq_encode` of an :class:`~.ann.IvfIndex`, whose
+    codes are RESIDUALS against a ``train_ivf_pq`` codebook): probe the
+    ``nprobe`` nearest cells, rank candidates by IVFADC (codes only,
+    one residual-query ADC table per probed cell —
+    :func:`ivf_adc_scored`), exact-rerank the best ``rerank`` by true
+    cosine. Returns ``(vec_id, cell, cos_sim)`` best-first. At nprobe =
+    n_cells and rerank >= the candidate count this is provably exact — the
     regime the equality test pins; production trades both knobs for
     scan volume. Probe selection and the NaN-guarded cosine are the
     SHARED ann.py helpers, so the funnel can never drift from
     ``ivf_search``."""
     probe = probe_nearest_cells(centroids, query, nprobe)
     shortlist = (
-        assigned_encoded.filter(F.col("cell").isin(probe))
-        .select("vec_id", "v", "cell", adc_dist_col(codebook, query).alias("_adc"))
+        ivf_adc_scored(assigned_encoded, codebook, centroids, probe, query)
+        .select("vec_id", "v", "cell", "_adc")
         .orderBy("_adc", "vec_id")
         .limit(rerank)
     )
@@ -358,24 +498,31 @@ def write_ivf_pq_index(index, codebook: PqCodebook, path: str) -> None:
     tables under ``path`` plus a JSON meta sidecar:
 
     - ``codes/``: ``(vec_id, code)`` partitioned by ``cell`` — the
-      narrow table the ADC phase scans. Keeping the codes PHYSICALLY
-      separate from the vectors (not just a column next to them) is the
-      point: the ADC scan's I/O is the ~16-100x-compressed codes and
-      nothing else, and nprobe turns into partition pruning exactly as
-      in ``ann.write_ivf_index``.
+      residual codes of :func:`ivf_pq_encode` (``codebook`` comes from
+      ``train_ivf_pq``), the narrow table the ADC phase scans. Keeping
+      the codes PHYSICALLY separate from the vectors (not just a column
+      next to them) is the point: the ADC scan's I/O is the
+      ~16-100x-compressed codes and nothing else, and nprobe turns into
+      partition pruning exactly as in ``ann.write_ivf_index``.
     - ``vectors/``: ``(vec_id, v)`` partitioned by ``cell`` — read only
       by the exact-rerank phase, which joins the tiny ADC shortlist
       back against the probed cells' vectors.
 
     ``index`` is an :class:`~.ann.IvfIndex`; encoding uses the BLAS
-    Arrow path (production codebook sizes). The sidecar is written
-    THROUGH Spark like ann.py's, so distributed filesystems work."""
+    Arrow path (production codebook sizes); a codebook that is not
+    ``train_ivf_pq``'s for this index raises before anything is
+    written. The sidecar carries the coarse centroids beside the
+    codebook, and ``by_residual``: a search needs the centroids to
+    build its per-cell residual ADC tables, and an index without the
+    mark (raw-space codes) opens with an unmarked codebook, which every
+    search refuses. It is written THROUGH Spark like ann.py's, so
+    distributed filesystems work."""
     import json
 
     # cell rides THROUGH the encode pass — a vec_id re-join of the codes
     # against the assigned frame would shuffle the whole corpus twice
     # for a column the mapper already had in hand
-    codes = pq_encode_arrow(index.assigned, codebook, vec_col="v", passthrough=("cell",))
+    codes = ivf_pq_encode(index, codebook, keep_vectors=False)
     codes.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/codes")
     index.assigned.select("vec_id", "v", "cell").write.mode("overwrite").partitionBy(
         "cell"
@@ -387,6 +534,7 @@ def write_ivf_pq_index(index, codebook: PqCodebook, path: str) -> None:
             "m": codebook.m,
             "dsub": codebook.dsub,
             "codebook": codebook.centroids,
+            "by_residual": True,
         }
     )
     spark.createDataFrame([(meta,)], "c string").coalesce(1).write.mode(
@@ -402,7 +550,10 @@ def read_ivf_pq_index(spark, path: str):
 
     meta = json.loads(spark.read.text(f"{path}/_meta").first().value)
     codebook = PqCodebook(
-        m=meta["m"], dsub=meta["dsub"], centroids=meta["codebook"]
+        m=meta["m"],
+        dsub=meta["dsub"],
+        centroids=meta["codebook"],
+        coarse=meta["centroids"] if meta.get("by_residual") else None,
     )
     codes = spark.read.parquet(f"{path}/codes").select("vec_id", "code", "cell")
     vectors = spark.read.parquet(f"{path}/vectors").select("vec_id", "v", "cell")
@@ -423,7 +574,9 @@ def ivf_pq_search_indexed(
     """The funnel over a materialized index (``write_ivf_pq_index``
     layout): phase 1 scans ONLY the codes table of the probed cells
     (partition-pruned, vector-free — the compressed-scan win PQ exists
-    for) and takes the ``rerank``-row ADC shortlist; phase 2 joins that
+    for) and takes the ``rerank``-row IVFADC shortlist, ranked against
+    one residual-query table per probed cell
+    (:func:`ivf_adc_scored`); phase 2 joins that
     tiny shortlist (broadcast) against the probed cells' vectors for
     the exact cosine top-k. Same result as :func:`ivf_pq_search` over
     the equivalent in-memory frame (test-pinned); the in-memory variant
@@ -432,8 +585,8 @@ def ivf_pq_search_indexed(
     on-disk index."""
     probe = probe_nearest_cells(centroids, query, nprobe)
     shortlist = (
-        codes.filter(F.col("cell").isin(probe))
-        .select("vec_id", adc_dist_col(codebook, query).alias("_adc"))
+        ivf_adc_scored(codes, codebook, centroids, probe, query)
+        .select("vec_id", "_adc")
         .orderBy("_adc", "vec_id")
         .limit(rerank)
         .select("vec_id")

@@ -17,10 +17,13 @@ from kafka_connect_ftp_spark.operators.pq import (
     adc_dist_col,
     adc_table,
     codebook_from_first_ids,
+    ivf_adc_scored,
+    ivf_pq_encode,
     ivf_pq_search,
     pq_adc_search,
     pq_encode,
     pq_encode_arrow,
+    train_ivf_pq,
     train_pq,
 )
 
@@ -140,9 +143,8 @@ def test_ivf_pq_exact_in_exhaustive_regime(spark, emb):
 
     df, rows = emb
     index = build_ivf(df, vec_col="embedding", k=4, seed=42)
-    cb = train_pq(df, m=2, ksub=4, seed=7)
-    codes = pq_encode(df, cb)
-    assigned = index.assigned.join(codes, "vec_id")
+    cb = train_ivf_pq(index, m=2, ksub=4, seed=7)
+    assigned = ivf_pq_encode(index, cb)
     query = rows[11][1]
     got = ivf_pq_search(
         assigned, index.centroids, cb, query, top_k=5, nprobe=4, rerank=200
@@ -168,6 +170,96 @@ def test_adc_search_plan_is_python_free(spark, emb):
     assert "TakeOrderedAndProject" in plan
 
 
+def test_ivfadc_exact_when_residuals_are_centroids(spark):
+    # every RESIDUAL v - centroids[cell] is a codebook centroid -> zero
+    # quantization error -> the per-cell residual-query tables give the
+    # true squared distance, and the lookup stays Python-free
+    from dataclasses import replace
+
+    from kafka_connect_ftp_spark.operators.ann import IvfIndex
+    from kafka_connect_ftp_spark.operators.pq import codebook_from_vectors
+
+    rng = random.Random(9)
+    centroids = [[0.0, 0.0, 0.0, 0.0], [5.0, -5.0, 5.0, -5.0]]
+    rows = [
+        (i, i % 2, [c + rng.uniform(-1, 1) for c in centroids[i % 2]])
+        for i in range(4)
+    ]
+    assigned = spark.createDataFrame(
+        rows, "vec_id bigint, cell int, v array<double>"
+    )
+    index = IvfIndex(assigned=assigned, centroids=centroids)
+    resid = [[x - c for x, c in zip(v, centroids[cell])] for _, cell, v in rows]
+    cb = replace(codebook_from_vectors(resid, m=2, ksub=4), coarse=centroids)
+    enc = ivf_pq_encode(index, cb)
+    assert {r.vec_id: list(r.code) for r in enc.collect()} == {
+        i: [i, i] for i in range(4)
+    }
+
+    query = [1.0, -2.0, 3.0, -0.5]
+    codes = spark.createDataFrame(
+        [(i, cell, [i, i]) for i, cell, _ in rows],
+        "vec_id bigint, cell int, code array<int>",
+    )
+    scored = ivf_adc_scored(codes, cb, centroids, [0, 1], query).select(
+        "vec_id", F.col("_adc").alias("d")
+    )
+    got = {r.vec_id: r.d for r in scored.collect()}
+    for i, _, v in rows:
+        true = sum((q - x) ** 2 for q, x in zip(query, v))
+        assert got[i] == pytest.approx(true, rel=1e-9)
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert "MapInPandas" not in plan
+    # a probe that leaves a cell out scores only the probed cell's rows
+    only0 = ivf_adc_scored(codes, cb, centroids, [0], query).collect()
+    assert sorted(r.vec_id for r in only0) == [0, 2]
+
+
+def test_ivf_pq_refuses_codebook_not_fit_to_its_residuals(spark, emb, tmp_path):
+    # IVF-PQ codes are residuals: a raw-space train_pq codebook, or one
+    # fit to another quantizer's residuals, would rank without an error
+    # and lose recall, so every IVF-PQ entry point refuses it
+    import json
+
+    from kafka_connect_ftp_spark.operators.ann import build_ivf
+    from kafka_connect_ftp_spark.operators.pq import (
+        ivf_pq_search_indexed,
+        read_ivf_pq_index,
+        write_ivf_pq_index,
+    )
+
+    df, rows = emb
+    index = build_ivf(df, vec_col="embedding", k=4, seed=42)
+    other = build_ivf(df, vec_col="embedding", k=3, seed=1)
+    query = rows[5][1]
+    raw = train_pq(df, m=2, ksub=4, seed=7)
+    foreign = train_ivf_pq(other, m=2, ksub=4, seed=7)
+    frame = index.assigned.join(pq_encode(df, raw), "vec_id")
+    for cb in (raw, foreign):
+        with pytest.raises(ValueError, match="train_ivf_pq|coarse"):
+            ivf_pq_encode(index, cb)
+        with pytest.raises(ValueError, match="train_ivf_pq|coarse"):
+            ivf_pq_search(frame, index.centroids, cb, query, nprobe=2)
+        with pytest.raises(ValueError, match="train_ivf_pq|coarse"):
+            write_ivf_pq_index(index, cb, str(tmp_path / "refused"))
+    assert not (tmp_path / "refused").exists()
+
+    # an index whose sidecar lacks the residual mark (raw-space codes)
+    # opens with an unmarked codebook, and its search refuses
+    path = str(tmp_path / "index")
+    write_ivf_pq_index(index, train_ivf_pq(index, m=2, ksub=4, seed=7), path)
+    meta = json.loads(spark.read.text(f"{path}/_meta").first().value)
+    del meta["by_residual"]
+    spark.createDataFrame([(json.dumps(meta),)], "c string").coalesce(1).write.mode(
+        "overwrite"
+    ).text(f"{path}/_meta")
+    codes, vectors, centroids, cb = read_ivf_pq_index(spark, path)
+    assert cb.coarse is None
+    with pytest.raises(ValueError, match="train_ivf_pq"):
+        ivf_pq_search_indexed(codes, vectors, centroids, cb, query, nprobe=2)
+
+
 def test_dimension_and_size_validation(spark):
     df = _vecs(spark, [(0, [1.0, 2.0, 3.0]), (1, [1.0, 1.0, 1.0])])
     with pytest.raises(ValueError):
@@ -189,7 +281,7 @@ def test_materialized_index_round_trip_and_pruning(spark, emb, tmp_path_factory)
 
     df, rows = emb
     index = build_ivf(df, vec_col="embedding", k=4, seed=42)
-    cb = train_pq(df, m=2, ksub=8, seed=3)
+    cb = train_ivf_pq(index, m=2, ksub=8, seed=3)
     path = str(tmp_path_factory.mktemp("ivfpq") / "index")
     write_ivf_pq_index(index, cb, path)
     codes, vectors, centroids, cb2 = read_ivf_pq_index(spark, path)
@@ -200,7 +292,7 @@ def test_materialized_index_round_trip_and_pruning(spark, emb, tmp_path_factory)
 
     # search over the opened index == search over the in-memory frame
     query = rows[11][1]
-    assigned = index.assigned.join(pq_encode(df, cb), "vec_id")
+    assigned = ivf_pq_encode(index, cb)
     want = ivf_pq_search(
         assigned, index.centroids, cb, query, top_k=5, nprobe=2, rerank=50
     ).collect()
@@ -285,7 +377,7 @@ def test_indexed_funnel_recall_matrix_production_knobs(spark, tmp_path_factory):
     df = _vecs(spark, rows)
 
     index = build_ivf(df, k=n_clusters, seed=5)
-    cb = train_pq(df, m=6, ksub=16, seed=11)
+    cb = train_ivf_pq(index, m=6, ksub=16, seed=11)
     path = str(tmp_path_factory.mktemp("ivfpq_prod") / "index")
     write_ivf_pq_index(index, cb, path)
     codes, vectors, centroids, cb2 = read_ivf_pq_index(spark, path)
@@ -312,10 +404,14 @@ def test_indexed_funnel_recall_matrix_production_knobs(spark, tmp_path_factory):
     r1 = recall_at(nprobe=1, rerank=32)
     r2 = recall_at(nprobe=2, rerank=64)
     r4 = recall_at(nprobe=4, rerank=128)
-    # nprobe=1 probes the query's own L2 cell but the FINAL ranking is
-    # cosine, so some true neighbors live in direction-similar other
-    # cells (the classic metric gap a single probe can't cover —
-    # observed 0.625 here); widening the funnel closes it (0.95 / 1.0)
+    # build_ivf recovers the 12 clusters as 12 cells of 100, and an exact
+    # search inside the probed cell finds every true neighbor at nprobe=1:
+    # what a small funnel loses is ADC ties. A raw-space codebook spends
+    # its 16 centroids per subspace on the cluster centres, leaving a
+    # cell with 1-18 distinct codes, so the rerank shortlist was cut by
+    # the vec_id tie-break (r1 0.30-0.625 by core count). Residual codes
+    # (IVFADC) give every vector of a cell its own code: observed
+    # 0.80-0.875 / 0.975-1.0 / 1.0 at local[2..32]
     assert r1 >= 0.5, r1
     assert r2 >= 0.85, r2
     assert r4 >= 0.95, r4

@@ -29,14 +29,15 @@ def main() -> int:
     n_queries = int(sys.argv[2]) if len(sys.argv) > 2 else 8
 
     from kafka_connect_ftp_spark.operators.ann import (
+        IvfIndex,
         brute_force_topk,
         build_ivf,
         ivf_search,
     )
     from kafka_connect_ftp_spark.operators.pq import (
+        ivf_pq_encode,
         ivf_pq_search,
-        pq_encode_arrow,
-        train_pq,
+        train_ivf_pq,
     )
     from kafka_connect_ftp_spark.operators.sq import (
         ivf_sq_search,
@@ -49,21 +50,16 @@ def main() -> int:
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     dim = len(emb.select("embedding").first()[0])
 
-    index = build_ivf(emb, k=16)
-    assigned = index.assigned.localCheckpoint(eager=True)
+    built = build_ivf(emb, k=16)
+    assigned = built.assigned.localCheckpoint(eager=True)
+    index = IvfIndex(assigned=assigned, centroids=built.centroids)
     bounds = train_sq(assigned, vec_col="v")
     with_sq = assigned.join(sq_encode(assigned, bounds), "vec_id").localCheckpoint(
         eager=True
     )
     m = 8
-    cb = train_pq(assigned, m=m, ksub=64, vec_col="v")
-    # pq_encode_arrow internally aliases the vector column to "v", so v
-    # itself can't ride passthrough — join it back for the rerank stage
-    with_pq = (
-        pq_encode_arrow(assigned, cb, vec_col="v", passthrough=("cell",))
-        .join(assigned.select("vec_id", "v"), "vec_id")
-        .localCheckpoint(eager=True)
-    )
+    cb = train_ivf_pq(index, m=m, ksub=64)
+    with_pq = ivf_pq_encode(index, cb).localCheckpoint(eager=True)
 
     qrows = emb.orderBy("vec_id").limit(n_queries).collect()
     queries = [list(map(float, r.embedding)) for r in qrows]
