@@ -33,7 +33,6 @@ from functools import partial
 
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kafka_connect_ftp_spark.ingest.model import (
     PATHS_SCHEMA,
@@ -45,7 +44,10 @@ from kafka_connect_ftp_spark.ingest.model import (
     walk_roots,
     with_content,
 )
-from kafka_connect_ftp_spark.ingest.snapshot import empty_state, snapshot
+from kafka_connect_ftp_spark.ingest.snapshot import TickExprs, empty_state, snapshot
+
+# load_state's marker argument when the caller has not read the marker
+_UNREAD = object()
 
 
 def _local_fetch(meta: DataFrame) -> DataFrame:
@@ -214,6 +216,9 @@ class PollPipeline:
         # paths
         self._n_tracked: int | None = None
         self.last_metrics: dict | None = None
+        # the tick plan's Column expressions, rebuilt only when ``now``
+        # changes (see TickExprs)
+        self._exprs: TickExprs | None = None
         os.makedirs(state_dir, exist_ok=True)
 
     # -- state table ------------------------------------------------------
@@ -247,8 +252,10 @@ class PollPipeline:
     def _bucket_dir(self, version: str) -> str:
         return os.path.join(self.state_dir, f"bucket_{version}")
 
-    def load_state(self) -> DataFrame:
-        mk = self._read_marker()
+    def load_state(self, marker=_UNREAD) -> DataFrame:
+        """The current state version; ``marker`` is the CURRENT marker
+        as ``_read_marker`` returned it, if the caller has read it."""
+        mk = self._read_marker() if marker is _UNREAD else marker
         if mk is None:
             return empty_state(self.spark)
         version, buckets = mk
@@ -359,13 +366,18 @@ class PollPipeline:
         no file commits nothing.
         """
         t0 = _time.monotonic()
-        state = self.load_state()
         mk = self._read_marker()
+        state = self.load_state(mk)
         if self._n_tracked is None:
             # a restart: count the state resumed from, once — a parquet
             # count() decodes no column, so it is metadata-priced at any
             # state size
             self._n_tracked = 0 if mk is None else state.count()
+        exprs = self._exprs
+        if exprs is None or exprs.key != (tuple(self.monitors), now, self.max_age_seconds):
+            exprs = self._exprs = TickExprs(
+                self.monitors, now=now, max_age_seconds=self.max_age_seconds
+            )
         records, new_state, stats = snapshot(
             self.default_listing(),
             state,
@@ -374,6 +386,7 @@ class PollPipeline:
             max_age_seconds=self.max_age_seconds,
             now=now,
             max_files=self.max_files_per_poll,
+            exprs=exprs,
             # one action materializes the fetched rows feeding BOTH
             # records and new_state, and counts them: one listing+fetch
             # per tick, and the committed hash always matches the
@@ -385,7 +398,7 @@ class PollPipeline:
         # before drop_empty: zero records means no file was fetched.
         n_records = stats.n_changed if self.drop_empty else stats.n_records
         if self.drop_empty:
-            records = records.filter(F.length("value") > 0)
+            records = records.filter(exprs.nonempty)
         if stats.n_records:
             prev_version = mk[0] if mk else None
             version = f"v{int(prev_version[1:]) + 1}" if prev_version else "v0"

@@ -5,8 +5,8 @@ One call = one poll tick of the reference's FtpMonitor
 DataFrame pipeline:
 
     listing ⟕ state (on path)           J1 state-lookup join
-      → max-age filter                  F1 (before any content is touched)
-      → requires-fetch filter           F2 (size/timestamp change)
+      → max-age, requires-fetch filter  F1, F2 (size/timestamp change;
+                                        before any content is touched)
       → rate limit                      L1 (oldest N paths)
       → source fetch                    only the surviving paths, each once
       → monitor tagging                 S5 (explode the matching monitors)
@@ -77,6 +77,134 @@ class TickStats(NamedTuple):
     changed_paths: list[str]  # paths with a non-empty record, sorted
 
 
+class TickExprs:
+    """The Column expressions of a tick's plan for one ``(monitors, now,
+    max_age_seconds)``.
+
+    Building a Column is a JVM round trip per call, and about ten more
+    for PySpark's call-site capture, so a tick that built its own spent
+    most of its ~1,700 round trips here. ``PollPipeline`` builds them
+    once and hands them to every tick with the same key; they reference
+    no frame, so no tick's plan keeps another's alive.
+    """
+
+    def __init__(
+        self,
+        monitors: Sequence[MonitoredPath],
+        *,
+        now: str | None = None,
+        max_age_seconds: float | None = None,
+    ) -> None:
+        if not monitors:
+            raise ValueError("at least one MonitoredPath is required")
+        self.key = (tuple(monitors), now, max_age_seconds)
+        now_col = F.lit(now).cast("timestamp") if now else F.current_timestamp()
+        path, size, p_size, p_hash = F.col("path"), F.col("size"), F.col("p_size"), F.col("p_hash")
+
+        self.prev = [
+            F.col(c).alias(f"p_{c}")
+            for c in ("path", "size", "timestamp", "hash", "first_fetched", "last_modified")
+        ]
+        self.state_join = path == F.col("p_path")
+        # the listing's monitor match (the local tree's walk applies it
+        # already; an FTP listing does not), the max-age cut F1 and
+        # requires-fetch F2 (size/timestamp change), as one filter over
+        # the state join: the optimizer pushes the listing-only terms
+        # below the join
+        keep = path.rlike(monitors_regex(monitors))
+        if max_age_seconds is not None:
+            keep = keep & (
+                F.col("modification_time") >= now_col - F.make_interval(secs=F.lit(max_age_seconds))
+            )
+        self.requires_fetch = keep & (
+            F.col("p_path").isNull()
+            | (p_size != size)
+            | (F.col("p_timestamp") != F.col("modification_time"))
+        )
+
+        # oversized bodies: fail loudly instead of mis-slicing (module doc)
+        content = F.when(size <= F.lit(2**31 - 1), F.col("content")).otherwise(
+            F.raise_error(F.concat(F.lit("body exceeds 2 GiB: "), path))
+        )
+        new_hash = F.sha2(content, 256)
+        known = p_hash.isNotNull()
+        # one projection holds the digest twice (the hash column and this
+        # test); subexpression elimination computes it once per row. The
+        # hash term leads the OR so that this holds also when
+        # spark.sql.subexpressionElimination.skipForShortcutExpr is set
+        changed_on_fetch = (p_hash != new_hash) | (p_size != size)
+        self.per_path = [
+            path,
+            size,
+            F.col("modification_time"),
+            p_size,
+            p_hash,
+            content.alias("content"),
+            new_hash.alias("hash"),
+            F.coalesce(F.col("p_first_fetched"), now_col).alias("first_fetched"),
+            F.when(changed_on_fetch | ~known, now_col)
+            .otherwise(F.col("p_last_modified"))
+            .alias("last_modified"),
+            now_col.alias("last_inspected"),
+        ]
+
+        # S5/U1: one row per (path, matching monitor), tagged with its
+        # topic and mode — the reference processes each MonitoredPath
+        # independently (FtpMonitor.scala:166-167)
+        tags = F.array_compact(
+            F.array(
+                *(
+                    F.when(
+                        path.rlike(m.regex),
+                        F.struct(F.lit(m.topic).alias("topic"), F.lit(m.tail).alias("tail")),
+                    )
+                    for m in monitors
+                )
+            )
+        )
+        self.tagged = [F.col("*"), F.inline(tags)]
+
+        changed = (p_size != size) | (p_hash != F.col("hash"))
+        prefix_hash = F.sha2(F.expr("substring(content, 1, cast(p_size as int))"), 256)
+        grown = size > p_size
+        prefix_intact = p_hash == prefix_hash
+        tail_suffix = F.expr("substring(content, cast(p_size as int) + 1, cast(size - p_size as int))")
+        empty = F.lit(b"")
+        body = (
+            F.when(~known, F.col("content"))
+            .when(~changed, empty)
+            .when(~F.col("tail"), F.col("content"))
+            .when(grown & prefix_intact, tail_suffix)
+            .when(grown, F.col("content"))
+            .otherwise(empty)
+        )
+        body_offset = (
+            F.when(known & changed & F.col("tail") & grown & prefix_intact, p_size)
+            .otherwise(F.lit(0))
+            .cast("long")
+        )
+        self.records = [
+            F.col("topic"),
+            path.alias("key_name"),
+            body_offset.alias("key_offset"),
+            body.alias("value"),
+        ]
+        self.nonempty = F.length("value") > 0
+        # the materializing action's row per record: path, new-or-known,
+        # body length
+        self.stats = [path, known.alias("known"), F.length(body).alias("n")]
+        self.updates = [
+            path,
+            size,
+            F.col("modification_time").alias("timestamp"),
+            F.col("hash"),
+            F.col("first_fetched"),
+            F.col("last_modified"),
+            F.col("last_inspected"),
+            F.lit(-1).cast("long").alias("offset"),
+        ]
+
+
 def snapshot(
     listing: DataFrame,
     state: DataFrame,
@@ -88,6 +216,7 @@ def snapshot(
     drop_empty: bool = False,
     max_files: int | None = None,
     checkpoint: bool = False,
+    exprs: TickExprs | None = None,
 ) -> tuple[DataFrame, DataFrame] | tuple[DataFrame, DataFrame, TickStats]:
     """Process one poll tick. Returns ``(records, new_state)``, or with
     ``checkpoint`` ``(records, new_state, stats)``.
@@ -119,35 +248,25 @@ def snapshot(
     then read the kept rows, so neither re-lists nor re-fetches, and
     ``new_state``'s merge takes the tick's fetched paths as a local
     relation.
+
+    ``exprs`` are the plan's prebuilt Column expressions for these
+    ``monitors``, ``now`` and ``max_age_seconds`` (``TickExprs``); a
+    caller that runs many ticks passes the same ones to each, and one is
+    built when none is given.
     """
-    if not monitors:
-        raise ValueError("at least one MonitoredPath is required")
+    if exprs is None:
+        exprs = TickExprs(monitors, now=now, max_age_seconds=max_age_seconds)
+    elif exprs.key != (tuple(monitors), now, max_age_seconds):
+        raise ValueError("exprs were built for other monitors, now or max_age_seconds")
     has_content = "content" in listing.columns
     if fetch is None and not has_content:
         raise ValueError("a listing without content needs a fetch")
-    now_col = F.lit(now).cast("timestamp") if now else F.current_timestamp()
 
-    listed = listing.filter(F.col("path").rlike(monitors_regex(monitors)))
-    prev = state.select(
-        F.col("path").alias("p_path"),
-        F.col("size").alias("p_size"),
-        F.col("timestamp").alias("p_timestamp"),
-        F.col("hash").alias("p_hash"),
-        F.col("first_fetched").alias("p_first_fetched"),
-        F.col("last_modified").alias("p_last_modified"),
+    fetched = (
+        listing.join(state.select(*exprs.prev), exprs.state_join, "left")
+        .filter(exprs.requires_fetch)
+        .drop("p_path", "p_timestamp")
     )
-    joined = listed.join(prev, listed["path"] == prev["p_path"], "left")
-
-    if max_age_seconds is not None:
-        joined = joined.filter(
-            F.col("modification_time") >= now_col - F.make_interval(secs=F.lit(max_age_seconds))
-        )
-    requires_fetch = (
-        F.col("p_path").isNull()
-        | (F.col("p_size") != F.col("size"))
-        | (F.col("p_timestamp") != F.col("modification_time"))
-    )
-    fetched = joined.filter(requires_fetch).drop("p_path", "p_timestamp")
     if max_files is not None:
         # the listing has one row per path, so this caps PATHS: a file
         # matched by two monitors keeps both of its records (monitors
@@ -162,22 +281,7 @@ def snapshot(
         fetched = fetched.orderBy("modification_time", "path").limit(max_files)
     if not has_content:
         fetched = fetch(fetched)
-
-    # oversized bodies: fail loudly instead of mis-slicing (see module doc)
-    content = F.when(F.col("size") <= F.lit(2**31 - 1), F.col("content")).otherwise(
-        F.raise_error(F.concat(F.lit("body exceeds 2 GiB: "), F.col("path")))
-    )
-    known = F.col("p_hash").isNotNull()
-    changed = (F.col("p_size") != F.col("size")) | (F.col("p_hash") != F.col("hash"))
-    per_path = fetched.withColumn("content", content).withColumn(
-        "hash", F.sha2(F.col("content"), 256)
-    ).withColumns(
-        {
-            "first_fetched": F.coalesce(F.col("p_first_fetched"), now_col),
-            "last_modified": F.when(~known | changed, now_col).otherwise(F.col("p_last_modified")),
-            "last_inspected": now_col,
-        }
-    )
+    per_path = fetched.select(*exprs.per_path)
 
     if checkpoint:
         # Keep the fetched per-path rows when they are first computed
@@ -197,59 +301,11 @@ def snapshot(
         # for df.checkpoint().
         per_path = per_path.localCheckpoint(eager=False)
 
-    # S5/U1: one row per (path, matching monitor), tagged with its topic
-    # and mode — the reference processes each MonitoredPath
-    # independently (FtpMonitor.scala:166-167)
-    tags = F.array_compact(
-        F.array(
-            *(
-                F.when(
-                    F.col("path").rlike(m.regex),
-                    F.struct(F.lit(m.topic).alias("topic"), F.lit(m.tail).alias("tail")),
-                )
-                for m in monitors
-            )
-        )
-    )
-    tagged = per_path.select("*", F.inline(tags))
-
-    prefix_hash = F.sha2(F.expr("substring(content, 1, cast(p_size as int))"), 256)
-    grown = F.col("size") > F.col("p_size")
-    prefix_intact = F.col("p_hash") == prefix_hash
-    tail_suffix = F.expr("substring(content, cast(p_size as int) + 1, cast(size - p_size as int))")
-    empty = F.lit(b"")
-    body = (
-        F.when(~known, F.col("content"))
-        .when(~changed, empty)
-        .when(~F.col("tail"), F.col("content"))
-        .when(grown & prefix_intact, tail_suffix)
-        .when(grown, F.col("content"))
-        .otherwise(empty)
-    )
-    body_offset = (
-        F.when(known & changed & F.col("tail") & grown & prefix_intact, F.col("p_size"))
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
-    records = tagged.select(
-        "topic",
-        F.col("path").alias("key_name"),
-        body_offset.alias("key_offset"),
-        body.alias("value"),
-    )
+    tagged = per_path.select(*exprs.tagged)
+    records = tagged.select(*exprs.records)
     if drop_empty:
-        records = records.filter(F.length("value") > 0)
-
-    updates = per_path.select(
-        "path",
-        "size",
-        F.col("modification_time").alias("timestamp"),
-        "hash",
-        "first_fetched",
-        "last_modified",
-        "last_inspected",
-        F.lit(-1).cast("long").alias("offset"),
-    )
+        records = records.filter(exprs.nonempty)
+    updates = per_path.select(*exprs.updates)
     # last-write-wins merge: updated rows replace prior state; untouched
     # state (unfetched or unlisted paths) carries over — the reference
     # never deletes state (ConnectFileMetaDataStore.scala:26)
@@ -261,7 +317,7 @@ def snapshot(
     # the fetch, a row per record, collected. It fills the checkpoint
     # and yields every count the caller needs, so no second job
     # aggregates the records or counts the state.
-    rows = tagged.select("path", known.alias("known"), F.length(body).alias("n")).collect()
+    rows = tagged.select(*exprs.stats).collect()
     paths = sorted({r.path for r in rows})
     stats = TickStats(
         n_records=len(rows),

@@ -467,6 +467,94 @@ def test_poll_job_budget(spark, tree, tmp_path):
     assert idle <= 2
 
 
+def _busy_pipeline(spark, tree, tmp_path):
+    """A pipeline over 12 files, backfilled, and a function that changes
+    three of them (a tail append, an update, a new file) per call."""
+    for i in range(6):
+        write(tree, f"tails/t{i}", b"line %d\n" % i, T0)
+        write(tree, f"updates/u{i}", b"v%d" % i, T0)
+    pipe = PollPipeline(spark, monitors(tree), str(tmp_path / "state"))
+    pipe.poll()
+    n = [0]
+
+    def churn():
+        n[0] += 1
+        t = T0 + 60 * n[0]
+        write(tree, "tails/t0", b"line 0\n" + b"more\n" * n[0], t)
+        write(tree, "updates/u1", b"v1" + b"!" * n[0], t)
+        write(tree, f"updates/new{n[0]}", b"n", t)
+
+    return pipe, churn
+
+
+# py4j round trips of this test's warm tick, sink and state write
+# included: 290-370 measured (1,740-1,860 when every tick built its
+# Column expressions afresh); the bound is ~1.5x the median
+_WARM_POLL_ROUND_TRIPS = 450
+
+
+def test_warm_poll_py4j_round_trips(spark, tree, tmp_path, monkeypatch):
+    """A warm tick's driver-to-JVM round trips stay few: the tick's
+    Column expressions are built once per pipeline, not per tick (each
+    Column call is a round trip plus PySpark's call-site capture)."""
+    import gc
+
+    from kafka_connect_ftp_spark.streaming.ingest_stream import idempotent_parquet_sink
+    from py4j.clientserver import ClientServerConnection
+
+    pipe, churn = _busy_pipeline(spark, tree, tmp_path)
+    sink = idempotent_parquet_sink(str(tmp_path / "out"))
+    churn()
+    pipe.poll(sink=sink, epoch=1)
+
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        calls.append(1)
+        return send(self, command)
+
+    churn()
+    # proxies of earlier ticks freed now, not as deletes inside the count
+    gc.collect()
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    pipe.poll(sink=sink, epoch=2)
+    monkeypatch.undo()
+    assert pipe.last_metrics["n_changed"] == 3
+    print(f"py4j round trips of a warm tick: {len(calls)}")
+    assert 0 < len(calls) <= _WARM_POLL_ROUND_TRIPS
+
+
+def test_warm_tick_builds_no_tick_expressions(spark, tree, tmp_path, monkeypatch):
+    """Ticks with the same ``now`` (the default clock among them) reuse
+    the pipeline's Column expressions; a pinned ``now`` that changes
+    builds them once for the new value."""
+    import importlib
+
+    snapshot_mod = importlib.import_module("kafka_connect_ftp_spark.ingest.snapshot")
+    pipe, churn = _busy_pipeline(spark, tree, tmp_path)
+    churn()
+    pipe.poll()
+
+    built = []
+    init = snapshot_mod.TickExprs.__init__
+
+    def counted(self, *args, **kwargs):
+        built.append(kwargs.get("now"))
+        init(self, *args, **kwargs)
+
+    monkeypatch.setattr(snapshot_mod.TickExprs, "__init__", counted)
+    churn()
+    assert pipe.poll().count() == 3
+    assert pipe.poll().count() == 0
+    assert built == []
+    churn()
+    assert pipe.poll(now="2024-06-01 13:00:00").count() == 3
+    churn()
+    assert pipe.poll(now="2024-06-01 13:00:00").count() == 3
+    assert built == ["2024-06-01 13:00:00"]
+
+
 @pytest.mark.parametrize("bucket_state", [None, 4])
 def test_sink_failure_during_state_write_commits_nothing(spark, tree, tmp_path, bucket_state):
     """The sink raises while the next state version is being written:

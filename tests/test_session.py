@@ -93,3 +93,97 @@ def test_connect_fallback_is_untouched_noop(spark):
 
     fake = FakeConnectFrame()
     assert balanced(fake, spark) is fake
+
+
+def test_python_workers_reread_no_unchanged_zip(spark):
+    """Python workers come from ``worker_daemon``: their zip importers
+    skip re-reading an unchanged archive when a task's set-up
+    invalidates the import caches (CPython < 3.13, whose zipimport
+    re-reads eagerly)."""
+    import sys
+
+    import pytest
+
+    if sys.version_info >= (3, 13):
+        pytest.skip("zipimport of CPython 3.13+ re-reads lazily")
+
+    def probe(_):
+        import importlib
+        import zipimport
+
+        wrapped = hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__")
+        reads = []
+        read = zipimport._read_directory
+        zipimport._read_directory = lambda path: reads.append(path) or read(path)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read
+        zips = [p for p in sys.path if p.endswith((".zip", ".jar"))]
+        yield wrapped, reads, zips
+
+    [(wrapped, reads, zips)] = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
+    assert wrapped
+    assert zips, "no archive on the worker's path"
+    assert reads == []
+
+
+def test_rewritten_zip_on_path_is_reread(spark, tmp_path):
+    """A zip on a worker's ``sys.path`` rewritten with a new module: the
+    next ``importlib.invalidate_caches()`` re-reads it and the new
+    module imports."""
+    archive = str(tmp_path / "mods.zip")
+
+    def probe(_):
+        import importlib
+        import sys
+        import zipfile
+
+        with zipfile.ZipFile(archive, "w") as zf:
+            zf.writestr("zmod_first.py", "VALUE = 1\n")
+        sys.path.insert(0, archive)
+        try:
+            importlib.invalidate_caches()
+            first = importlib.import_module("zmod_first").VALUE
+            # the importer has now read this archive as it stands
+            importlib.invalidate_caches()
+            with zipfile.ZipFile(archive, "w") as zf:
+                zf.writestr("zmod_first.py", "VALUE = 1\n")
+                zf.writestr("zmod_second.py", "VALUE = 2\n")
+            importlib.invalidate_caches()
+            second = importlib.import_module("zmod_second").VALUE
+        finally:
+            sys.path.remove(archive)
+            sys.modules.pop("zmod_first", None)
+            sys.modules.pop("zmod_second", None)
+        yield first, second
+
+    assert spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect() == [(1, 2)]
+
+
+def test_session_outside_repo_without_pythonpath_runs_python_stage(tmp_path):
+    """A driver that imports the package from a path it put on
+    ``sys.path`` itself, with another cwd and no ``PYTHONPATH``, still
+    gets Python workers: the daemon module must import in them."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parents[1])
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from kafka_connect_ftp_spark.session import get_spark\n"
+        "spark = get_spark('outside')\n"
+        "df = spark.range(4).mapInPandas(lambda it: (p * 2 for p in it), 'id long')\n"
+        "print('ids', sorted(r.id for r in df.collect()))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="512m")
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "ids [0, 2, 4, 6]" in out.stdout, out.stderr[-3000:]
