@@ -13,6 +13,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # One row per file per poll tick — what a directory listing reveals (a
 # source's ``listing``), and with ``content`` what its ``fetch`` adds.
@@ -34,9 +35,6 @@ def with_content(schema: T.StructType) -> T.StructType:
 
 LISTING_SCHEMA = with_content(META_SCHEMA)
 
-# A set of paths (a tick's touched or changed files) as a frame.
-PATHS_SCHEMA = T.StructType([META_SCHEMA["path"]])
-
 
 def local_frame(
     spark: SparkSession, schema: T.StructType, columns: dict[str, list] | None = None
@@ -48,7 +46,6 @@ def local_frame(
     (``columns`` None) lets the optimizer prune the joins and unions it
     feeds."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     if columns is None:
         columns = {f.name: [] for f in schema.fields}
@@ -80,6 +77,9 @@ STATE_SCHEMA = T.StructType(
         T.StructField("offset", T.LongType(), False),
     ]
 )
+# The same, as the Arrow schema of the state the poll loop holds and
+# writes on the driver (timestamps: UTC micros).
+STATE_ARROW_SCHEMA = to_arrow_schema(STATE_SCHEMA)
 
 # Emitted records: the struct-key projection (FileInfo{name, offset}) plus
 # topic and value bytes (SimpleFileConverter.scala:54-66). ``key_offset`` is

@@ -12,7 +12,8 @@ DataFrame pipeline:
       → monitor tagging                 S5 (explode the matching monitors)
       → delta extraction                P1 (tail prefix-hash / update / new)
       → record projection               P4/P5 (topic routing, key/value)
-    + merged new-state table            (last-write-wins per path)
+    + the tick's state updates          (one row per fetched path; merged
+                                        last-write-wins into the state)
 
 Semantics are byte-exact with FtpMonitor.handleFetchedFile
 (FtpMonitor.scala:70-105), including the subtle cases:
@@ -34,9 +35,9 @@ Semantics are byte-exact with FtpMonitor.handleFetchedFile
 
 Scale: J1 joins the listing with the state table; content bytes never
 shuffle (delta extraction is map-side column logic on the fetched rows).
-At 100 TB of files the state table is bucketable by path so the join
-co-locates. The merge of the tick's updates into the carried state is
-the plan's other join.
+Without ``checkpoint`` the merge of the tick's updates into the carried
+state is the plan's other join; with it the updates come back to the
+driver, which merges them (``PollPipeline``).
 
 Unlike the reference, bodies larger than 2 GiB are rejected rather than
 silently truncated (the reference's ``.toInt`` overflow,
@@ -48,11 +49,13 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 from typing import NamedTuple
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_connect_ftp_spark.ingest.model import (
-    PATHS_SCHEMA,
+    STATE_ARROW_SCHEMA,
     STATE_SCHEMA,
     MonitoredPath,
     local_frame,
@@ -73,7 +76,6 @@ class TickStats(NamedTuple):
     n_records: int  # records, empty bodies included
     n_changed: int  # records with a non-empty body
     bytes_emitted: int  # summed body bytes
-    n_new_paths: int  # fetched paths that had no state row
     changed_paths: list[str]  # paths with a non-empty record, sorted
 
 
@@ -190,9 +192,6 @@ class TickExprs:
             body.alias("value"),
         ]
         self.nonempty = F.length("value") > 0
-        # the materializing action's row per record: path, new-or-known,
-        # body length
-        self.stats = [path, known.alias("known"), F.length(body).alias("n")]
         self.updates = [
             path,
             size,
@@ -203,6 +202,9 @@ class TickExprs:
             F.col("last_inspected"),
             F.lit(-1).cast("long").alias("offset"),
         ]
+        # the materializing action's row per record: its body length and
+        # its path's state update
+        self.collected = [F.length(body).alias("n"), *self.updates]
 
 
 def snapshot(
@@ -217,9 +219,9 @@ def snapshot(
     max_files: int | None = None,
     checkpoint: bool = False,
     exprs: TickExprs | None = None,
-) -> tuple[DataFrame, DataFrame] | tuple[DataFrame, DataFrame, TickStats]:
+) -> tuple[DataFrame, DataFrame] | tuple[DataFrame, pa.Table, TickStats]:
     """Process one poll tick. Returns ``(records, new_state)``, or with
-    ``checkpoint`` ``(records, new_state, stats)``.
+    ``checkpoint`` ``(records, updates, stats)``.
 
     ``listing`` has one row per path (path, size, modification_time); a
     listing that also carries ``content`` (LISTING_SCHEMA) needs no
@@ -242,12 +244,14 @@ def snapshot(
     batch-mode parity and bounded-memory polls.)
 
     ``checkpoint`` materializes the tick with ONE Spark action before
-    returning: the fetched rows are kept (``localCheckpoint``) and a
-    narrow per-record projection (path, new-or-known, body length) is
-    collected, from which the ``TickStats`` are counted. Both outputs
-    then read the kept rows, so neither re-lists nor re-fetches, and
-    ``new_state``'s merge takes the tick's fetched paths as a local
-    relation.
+    returning: the fetched rows are kept (``localCheckpoint``) for
+    ``records``, and a narrow per-record projection (body length plus
+    its path's state update) is collected as Arrow. The ``TickStats``
+    are counted from it, and ``updates`` is its state update per fetched
+    path, a ``STATE_ARROW_SCHEMA`` table for the caller to merge
+    (last write wins). ``records`` then reads the kept rows, so it
+    neither re-lists nor re-fetches, and each committed hash is the one
+    its record was cut with.
 
     ``exprs`` are the plan's prebuilt Column expressions for these
     ``monitors``, ``now`` and ``max_age_seconds`` (``TickExprs``); a
@@ -285,9 +289,8 @@ def snapshot(
 
     if checkpoint:
         # Keep the fetched per-path rows when they are first computed
-        # (the stats action below) and derive both outputs from them:
-        # records and new_state otherwise share un-materialized lineage,
-        # so a caller that actions both re-lists and re-fetches every
+        # (the collect below) and derive the records from them: the
+        # sink's action would otherwise re-list and re-fetch every
         # changed file (2x RETR per tick in FTP mode) — and a file
         # changing between the two scans would commit a hash the emitted
         # record never saw. The checkpoint also truncates the plan,
@@ -305,27 +308,28 @@ def snapshot(
     records = tagged.select(*exprs.records)
     if drop_empty:
         records = records.filter(exprs.nonempty)
-    updates = per_path.select(*exprs.updates)
     # last-write-wins merge: updated rows replace prior state; untouched
     # state (unfetched or unlisted paths) carries over — the reference
     # never deletes state (ConnectFileMetaDataStore.scala:26)
     if not checkpoint:
+        updates = per_path.select(*exprs.updates)
         carried = state.join(updates.select("path"), "path", "left_anti")
         return records, carried.unionByName(updates)
 
     # The tick's one materializing action: a JVM-only projection over
-    # the fetch, a row per record, collected. It fills the checkpoint
-    # and yields every count the caller needs, so no second job
-    # aggregates the records or counts the state.
-    rows = tagged.select(*exprs.stats).collect()
-    paths = sorted({r.path for r in rows})
+    # the fetch, a row per record, collected as Arrow. It fills the
+    # checkpoint and yields every count and state row the caller needs,
+    # so no second job aggregates the records or merges the state.
+    rows = tagged.select(*exprs.collected).toArrow()
+    changed = rows.filter(pc.greater(rows["n"], 0))
     stats = TickStats(
-        n_records=len(rows),
-        n_changed=sum(1 for r in rows if r.n),
-        bytes_emitted=sum(r.n for r in rows),
-        n_new_paths=len({r.path for r in rows if not r.known}),
-        changed_paths=sorted({r.path for r in rows if r.n}),
+        n_records=rows.num_rows,
+        n_changed=changed.num_rows,
+        bytes_emitted=pc.sum(changed["n"]).as_py() or 0,
+        changed_paths=sorted(pc.unique(changed["path"]).to_pylist()),
     )
-    touched = local_frame(listing.sparkSession, PATHS_SCHEMA, {"path": paths})
-    carried = state.join(touched, "path", "left_anti")
-    return records, carried.unionByName(updates), stats
+    # a path matched by several monitors has a record per monitor, each
+    # carrying the same update: keep its first
+    first = pc.index_in(pc.unique(rows["path"]), value_set=rows["path"])
+    updates = rows.take(first).select(STATE_ARROW_SCHEMA.names).cast(STATE_ARROW_SCHEMA)
+    return records, updates, stats

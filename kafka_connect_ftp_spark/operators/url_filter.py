@@ -184,8 +184,9 @@ def filter_by_blocklist(
       key. That single corpus shuffle is the honest scale cost when
       the blocked-host set cannot ship to every executor; semantics
       are identical. To eliminate even that, pre-bucket the corpus and
-      the blocked-host frame on the host (the bucket_state pattern) —
-      the joins here then go bucket-local."""
+      the blocked-host frame on the host (the pattern of
+      streaming/bucketed_state.py) — the joins here then go
+      bucket-local."""
     if join_mode not in ("broadcast", "shuffle"):
         raise ValueError(f"join_mode must be broadcast|shuffle, got {join_mode!r}")
     clash = {"_ufb_host", "_ufb_hit", "_ufb_sfx", "_ufb_entry"} & set(df.columns)

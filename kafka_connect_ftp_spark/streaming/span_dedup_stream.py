@@ -22,7 +22,7 @@ against exactly the pre-batch state and rewrites sink and state
 byte-identically no matter how torn the first attempt was. At 100 TB
 the state is (distinct spans ever admitted) longs; pass ``buckets=N``
 to store it as an EXTERNAL epoch-partitioned table CLUSTERED BY (h)
-(the ingest bucket_state pattern, ingest/pipeline.py): the per-batch
+(streaming/bucketed_state.py): the per-batch
 anti-join then reads the state bucket-aligned with NO state-side
 Exchange — only the micro-batch's own (small) span frame shuffles into
 bucket alignment, however large the accumulated state grows.

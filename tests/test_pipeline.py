@@ -63,67 +63,23 @@ def test_poll_cycle_with_restart(spark, tree, tmp_path):
     assert got1 == {("tails", 6, b"world"), ("updates", 0, b"v2!")}
 
 
-def test_bucketed_state_poll_cycle_and_shuffle_elision(spark, tree, tmp_path):
-    state_dir = str(tmp_path / "state")
-    write(tree, "tails/t0", b"hello ", T0)
-    write(tree, "updates/u0", b"v1", T0)
-
-    pipe = PollPipeline(spark, monitors(tree), state_dir, drop_empty=True, bucket_state=4)
-    got0 = {(r.topic, r.key_offset, bytes(r.value)) for r in pipe.poll().collect()}
-    assert got0 == {("tails", 0, b"hello "), ("updates", 0, b"v1")}
-
-    write(tree, "tails/t0", b"hello world", T0 + 60)
-    # restart: a fresh pipeline recovers state from the bucketed table
-    pipe2 = PollPipeline(spark, monitors(tree), state_dir, drop_empty=True, bucket_state=4)
-    got1 = {(r.topic, r.key_offset, bytes(r.value)) for r in pipe2.poll().collect()}
-    assert got1 == {("tails", 6, b"world")}
-
-    # superseded version tables are dropped; exactly one current version
-    live = [t.name for t in spark.catalog.listTables() if t.name.startswith("ftp_state_")]
-    assert live == [pipe2._table_name("v1")]
-
-    # the point of bucketing: joining on path reads the state side
-    # bucket-aligned with NO Exchange (only the probe side shuffles) —
-    # in the SMJ regime a real deployment is in, not the broadcast
-    # regime this test's table sizes would pick
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        state = pipe2.load_state()
-        probe = spark.createDataFrame([(p.path,) for p in state.select("path").collect()], "k string")
-        plan = (
-            probe.join(state, probe["k"] == state["path"])
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Bucketed: true" in plan
-        assert plan.count("Exchange") == 1  # probe side only
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql(f"DROP TABLE IF EXISTS {pipe2._table_name('v1')}")
-
-
-def test_bucketed_state_with_history_survives_version_drop(spark, tree, tmp_path):
-    # regression: the history write used to re-evaluate new_state's
-    # pre-commit lineage, whose carried branch read the version table the
-    # commit had just dropped → FILE_NOT_EXIST on every tick after the
-    # first; history now reads back the committed version
+def test_state_history_survives_version_pruning(spark, tree, tmp_path):
+    # the history outlives the versions it was taken from: four ticks
+    # commit v0..v3, retention prunes v0 and v1, and the trail still
+    # holds both versions of u0
     state_dir = str(tmp_path / "state")
     write(tree, "updates/u0", b"v1", T0)
-    pipe = PollPipeline(
-        spark, monitors(tree), state_dir, drop_empty=True,
-        bucket_state=4, keep_history=True,
-    )
-    try:
+    pipe = PollPipeline(spark, monitors(tree), state_dir, drop_empty=True, keep_history=True)
+    pipe.poll()
+    write(tree, "updates/u0", b"v2", T0 + 60)
+    got = {bytes(r.value) for r in pipe.poll().collect()}
+    assert got == {b"v2"}
+    for i in range(2):
+        write(tree, "updates/u1", b"w%d" % i, T0 + 120 + 60 * i)
         pipe.poll()
-        write(tree, "updates/u0", b"v2", T0 + 60)
-        got = {bytes(r.value) for r in pipe.poll().collect()}
-        assert got == {b"v2"}
-        hist = pipe.state_history()
-        assert hist.filter(hist.path.endswith("updates/u0")).count() == 2
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {pipe._table_name('v1')}")
+    assert sorted(d for d in os.listdir(state_dir) if d.startswith("v")) == ["v2", "v3"]
+    hist = pipe.state_history()
+    assert hist.filter(hist.path.endswith("updates/u0")).count() == 2
 
 
 def test_new_file_between_polls(spark, tree, tmp_path):
@@ -146,6 +102,24 @@ def test_topic_routing_per_directory(spark, tree, tmp_path):
         ("tails", "a"),
         ("updates", "b"),
     }
+
+
+def test_file_matched_by_two_monitors_is_one_state_row(spark, tree, tmp_path):
+    # a record per matching monitor, but one state row per path
+    write(tree, "logs/a.log", b"x", T0)
+    mons = [
+        MonitoredPath(f"{tree}/logs/", topic="all"),
+        MonitoredPath(f"{tree}/logs/*.log", topic="logs", tail=True),
+    ]
+    pipe = PollPipeline(spark, mons, str(tmp_path / "state"))
+    assert pipe.poll().count() == 2
+    assert pipe.last_metrics["n_tracked_paths"] == 1
+    assert pipe.load_state().count() == 1
+    write(tree, "logs/a.log", b"xy", T0 + 60)
+    got = sorted((r.topic, r.key_offset, bytes(r.value)) for r in pipe.poll().collect())
+    assert got == [("all", 0, b"xy"), ("logs", 1, b"y")]
+    assert pipe.last_metrics["n_tracked_paths"] == 1
+    assert pipe.load_state().count() == 1
 
 
 def test_glob_base():
@@ -339,54 +313,6 @@ def test_poll_reads_only_changed_bytes(spark, tree, tmp_path):
         _os.chmod(stable, 0o644)
 
 
-def test_bucketed_state_survives_catalog_loss(spark, tree, tmp_path):
-    """Review 9b (empirically reproduced brick): the bucketed state must
-    be loadable by a NEW session whose in-memory catalog is empty — the
-    table is external (data under state_dir) and load_state
-    re-registers it with the bucket count the MARKER recorded, so a
-    caller constructing with a different N cannot mis-bucket the join."""
-    state_dir = str(tmp_path / "state")
-    write(tree, "updates/u0", b"v1", T0)
-    pipe = PollPipeline(spark, monitors(tree), state_dir, drop_empty=True, bucket_state=4)
-    assert pipe.poll().count() == 1
-
-    # simulate a fresh session: catalog entry gone, files intact
-    spark.sql(f"DROP TABLE IF EXISTS {pipe._table_name('v0')}")
-    # new pipeline, DIFFERENT (wrong) bucket count in the constructor —
-    # the marker's recorded count must win for the existing version
-    pipe2 = PollPipeline(spark, monitors(tree), state_dir, drop_empty=True, bucket_state=8)
-    state = pipe2.load_state()
-    assert {r.path.rsplit("/", 1)[-1] for r in state.collect()} == {"u0"}
-    # and the re-registered table carries the WRITTEN bucket spec
-    desc = spark.sql(f"DESCRIBE TABLE EXTENDED {pipe2._table_name('v0')}").collect()
-    buckets = [r.data_type for r in desc if r.col_name == "Num Buckets"]
-    assert buckets == ["4"], desc
-
-    try:
-        # the poll cycle continues: nothing changed -> empty tick, then
-        # a mutation is picked up incrementally
-        assert pipe2.poll().count() == 0
-        write(tree, "updates/u0", b"v2!", T0 + 60)
-        got = {(r.topic, bytes(r.value)) for r in pipe2.poll().collect()}
-        assert got == {("updates", b"v2!")}
-    finally:
-        # shared-session catalog hygiene: sibling tests assert over
-        # listTables(); drop everything this state_dir registered
-        prefix = pipe2._table_name("v").rstrip("v")
-        for t in spark.catalog.listTables():
-            if t.name.startswith(prefix):
-                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-
-
-def test_quoted_state_dir_rejected(spark, tmp_path):
-    """ADVICE r9: a state_dir containing a single quote would reach the
-    bucketed restart's CREATE TABLE ... LOCATION f-string and die with
-    an opaque SQL parse error — reject it at construction instead."""
-    bad = str(tmp_path / "it's-state")
-    with pytest.raises(ValueError, match="single quote"):
-        PollPipeline(spark, monitors(str(tmp_path)), bad)
-
-
 def test_local_listing_matches_binary_file_scan(spark, tree, tmp_path):
     """The driver walk lists exactly the (path, size, modification_time)
     rows of a recursive ``binaryFile`` scan of the same roots — Spark's
@@ -442,15 +368,18 @@ def _jobs(spark, fn):
 
 def test_poll_job_budget(spark, tree, tmp_path):
     """A tick's Spark jobs: the listing is a driver walk, one action
-    materializes the fetch and counts it, the sink delivers, the state
-    version is written alongside. A backfill has no state to join or
-    merge; an idle tick writes nothing."""
+    materializes the fetch and collects its counts and state updates,
+    the sink delivers; the state version is written on the driver. A
+    backfill has no state to join; an idle tick writes nothing; a
+    restarted pipeline reads its state's row count from the held table,
+    not with a count job."""
     from kafka_connect_ftp_spark.streaming.ingest_stream import idempotent_parquet_sink
 
     for i in range(6):
         write(tree, f"tails/t{i}", b"line %d\n" % i, T0)
         write(tree, f"updates/u{i}", b"v%d" % i, T0)
-    pipe = PollPipeline(spark, monitors(tree), str(tmp_path / "state"))
+    state_dir = str(tmp_path / "state")
+    pipe = PollPipeline(spark, monitors(tree), state_dir)
     sink = idempotent_parquet_sink(str(tmp_path / "out"))
 
     backfill = _jobs(spark, lambda: pipe.poll(sink=sink, epoch=0))
@@ -459,12 +388,17 @@ def test_poll_job_budget(spark, tree, tmp_path):
     write(tree, "updates/new", b"n", T0 + 60)
     changes = _jobs(spark, lambda: pipe.poll(sink=sink, epoch=1))
     idle = _jobs(spark, lambda: pipe.poll(sink=sink, epoch=2))
-
     assert pipe.last_metrics["n_tracked_paths"] == 13
-    print(f"jobs per tick: backfill {backfill}, changes {changes}, idle {idle}")
-    assert backfill <= 4
-    assert changes <= 5
+
+    restarted = PollPipeline(spark, monitors(tree), state_dir)
+    restart = _jobs(spark, lambda: restarted.poll(sink=sink, epoch=3))
+    assert restarted.last_metrics["n_tracked_paths"] == 13
+
+    print(f"jobs per tick: backfill {backfill}, changes {changes}, idle {idle}, restart {restart}")
+    assert backfill <= 2
+    assert changes <= 3
     assert idle <= 2
+    assert restart <= 2
 
 
 def _busy_pipeline(spark, tree, tmp_path):
@@ -487,9 +421,10 @@ def _busy_pipeline(spark, tree, tmp_path):
     return pipe, churn
 
 
-# py4j round trips of this test's warm tick, sink and state write
-# included: 290-370 measured (1,740-1,860 when every tick built its
-# Column expressions afresh); the bound is ~1.5x the median
+# py4j round trips of this test's warm tick, sink included: ~180
+# measured with the state held and written on the driver (290-370 when
+# a Spark job wrote it; 1,740-1,860 when every tick also built its
+# Column expressions afresh)
 _WARM_POLL_ROUND_TRIPS = 450
 
 
@@ -498,6 +433,7 @@ def test_warm_poll_py4j_round_trips(spark, tree, tmp_path, monkeypatch):
     Column expressions are built once per pipeline, not per tick (each
     Column call is a round trip plus PySpark's call-site capture)."""
     import gc
+    import time
 
     from kafka_connect_ftp_spark.streaming.ingest_stream import idempotent_parquet_sink
     from py4j.clientserver import ClientServerConnection
@@ -515,8 +451,14 @@ def test_warm_poll_py4j_round_trips(spark, tree, tmp_path, monkeypatch):
         return send(self, command)
 
     churn()
-    # proxies of earlier ticks freed now, not as deletes inside the count
+    # proxies of earlier ticks (and tests) freed now, not as deletes
+    # inside the count: py4j sends a freed proxy's delete from a worker
+    # thread, so wait for its queue to drain
     gc.collect()
+    client = spark.sparkContext._gateway._gateway_client
+    deadline = time.monotonic() + 30
+    while client.finalizer_deque and time.monotonic() < deadline:
+        time.sleep(0.01)
     monkeypatch.setattr(ClientServerConnection, "send_command", counted)
     pipe.poll(sink=sink, epoch=2)
     monkeypatch.undo()
@@ -555,12 +497,13 @@ def test_warm_tick_builds_no_tick_expressions(spark, tree, tmp_path, monkeypatch
     assert built == ["2024-06-01 13:00:00"]
 
 
-@pytest.mark.parametrize("bucket_state", [None, 4])
-def test_sink_failure_during_state_write_commits_nothing(spark, tree, tmp_path, bucket_state):
-    """The sink raises while the next state version is being written:
-    the marker stays, the tracked-path gauge stays, and the retry tick
+@pytest.mark.parametrize("max_files", [None, 2])
+def test_sink_failure_during_state_write_commits_nothing(spark, tree, tmp_path, max_files):
+    """The sink raises after the next state version was written: the
+    marker stays, the tracked-path gauge stays, and the retry tick
     re-emits the same records and commits its own write of that version
-    over the orphan."""
+    over the orphan — also when the tick is capped (``max_files``) to
+    exactly the changed files."""
     import time
 
     state_dir = str(tmp_path / "state")
@@ -568,53 +511,96 @@ def test_sink_failure_during_state_write_commits_nothing(spark, tree, tmp_path, 
     write(tree, "updates/u1", b"w1", T0)
     pipe = PollPipeline(
         spark, [MonitoredPath(f"{tree}/updates/", topic="u")], state_dir,
-        drop_empty=True, bucket_state=bucket_state,
+        drop_empty=True, max_files_per_poll=max_files,
     )
-    try:
-        pipe.poll(now="2024-06-01 12:00:00")
-        marker = os.path.join(state_dir, "CURRENT")
-        with open(marker) as fh:
-            committed = fh.read()
-        before = sorted(pipe.load_state().collect())
-        assert pipe.last_metrics["n_tracked_paths"] == 2
+    pipe.poll(now="2024-06-01 12:00:00")
+    marker = os.path.join(state_dir, "CURRENT")
+    with open(marker) as fh:
+        committed = fh.read()
+    before = sorted(pipe.load_state().collect())
+    assert pipe.last_metrics["n_tracked_paths"] == 2
 
-        write(tree, "updates/u0", b"v2!", T0 + 60)
-        write(tree, "updates/u2", b"new", T0 + 60)
-        orphan = os.path.join(state_dir, "bucket_v1" if bucket_state else "v1")
-        seen = []
+    write(tree, "updates/u0", b"v2!", T0 + 60)
+    write(tree, "updates/u2", b"new", T0 + 60)
+    orphan = os.path.join(state_dir, "v1")
+    seen = []
 
-        def failing_sink(records, epoch):
-            seen.extend(sorted((r.key_name, bytes(r.value)) for r in records.collect()))
-            deadline = time.monotonic() + 30
-            while not os.path.exists(orphan) and time.monotonic() < deadline:
-                time.sleep(0.01)
-            assert os.path.exists(orphan)  # the write is under way
-            raise RuntimeError("broker down")
+    def failing_sink(records, epoch):
+        seen.extend(sorted((r.key_name, bytes(r.value)) for r in records.collect()))
+        deadline = time.monotonic() + 30
+        while not os.path.exists(orphan) and time.monotonic() < deadline:
+            time.sleep(0.01)
+        assert os.path.exists(orphan)  # the version is written
+        raise RuntimeError("broker down")
 
-        with pytest.raises(RuntimeError, match="broker down"):
-            pipe.poll(sink=failing_sink, epoch=1, now="2024-06-01 12:01:00")
-        with open(marker) as fh:
-            assert fh.read() == committed
-        assert sorted(pipe.load_state().collect()) == before
-        assert pipe.last_metrics["n_tracked_paths"] == 2
+    with pytest.raises(RuntimeError, match="broker down"):
+        pipe.poll(sink=failing_sink, epoch=1, now="2024-06-01 12:01:00")
+    with open(marker) as fh:
+        assert fh.read() == committed
+    assert sorted(pipe.load_state().collect()) == before
+    assert pipe.last_metrics["n_tracked_paths"] == 2
 
-        delivered = []
-        pipe.poll(
-            sink=lambda df, epoch: delivered.extend(
-                sorted((r.key_name, bytes(r.value)) for r in df.collect())
-            ),
-            epoch=1, now="2024-06-01 12:02:00",
-        )
-        assert delivered == seen and [v for _, v in delivered] == [b"v2!", b"new"]
-        assert pipe.last_metrics["n_tracked_paths"] == 3
-        with open(marker) as fh:
-            assert fh.read().split("\n")[0] == "v1"
-        # the current v1 is the retry's write, not the failed tick's
-        state = {r.path.rsplit("/", 1)[-1]: r for r in pipe.load_state().collect()}
-        assert sorted(state) == ["u0", "u1", "u2"]
-        assert str(state["u0"].last_inspected) == "2024-06-01 12:02:00"
-        assert pipe.poll().count() == 0
-    finally:
-        for t in spark.catalog.listTables():
-            if t.name.startswith(pipe._table_name("v").rstrip("v")):
-                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+    delivered = []
+    pipe.poll(
+        sink=lambda df, epoch: delivered.extend(
+            sorted((r.key_name, bytes(r.value)) for r in df.collect())
+        ),
+        epoch=1, now="2024-06-01 12:02:00",
+    )
+    assert delivered == seen and [v for _, v in delivered] == [b"v2!", b"new"]
+    assert pipe.last_metrics["n_tracked_paths"] == 3
+    with open(marker) as fh:
+        assert fh.read().split("\n")[0] == "v1"
+    # the current v1 is the retry's write, not the failed tick's
+    state = {r.path.rsplit("/", 1)[-1]: r for r in pipe.load_state().collect()}
+    assert sorted(state) == ["u0", "u1", "u2"]
+    assert str(state["u0"].last_inspected) == "2024-06-01 12:02:00"
+    assert pipe.poll().count() == 0
+
+
+def test_state_write_failure_delivers_and_commits_nothing(spark, tree, tmp_path, monkeypatch):
+    """The driver's write of the next state version raises: the sink is
+    never called, the marker, the held state and the tracked-path gauge
+    stay, and the next tick re-derives and delivers the same delta."""
+    import pyarrow.parquet as pq
+
+    state_dir = str(tmp_path / "state")
+    write(tree, "updates/u0", b"v1", T0)
+    pipe = PollPipeline(
+        spark, [MonitoredPath(f"{tree}/updates/", topic="u")], state_dir,
+        drop_empty=True,
+    )
+    pipe.poll()
+    marker = os.path.join(state_dir, "CURRENT")
+    with open(marker) as fh:
+        committed = fh.read()
+    held = pipe._state
+    assert pipe.last_metrics["n_tracked_paths"] == 1
+
+    write(tree, "updates/u0", b"v2!", T0 + 60)
+    write(tree, "updates/u1", b"new", T0 + 60)
+    called = []
+
+    def failing_write(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", failing_write)
+    with pytest.raises(OSError, match="disk full"):
+        pipe.poll(sink=lambda df, epoch: called.append(epoch), epoch=1)
+    monkeypatch.undo()
+    assert called == []
+    with open(marker) as fh:
+        assert fh.read() == committed
+    assert pipe._state is held
+    assert pipe.last_metrics["n_tracked_paths"] == 1
+
+    delivered = []
+    pipe.poll(
+        sink=lambda df, epoch: delivered.extend(
+            sorted((r.key_name.rsplit("/", 1)[-1], bytes(r.value)) for r in df.collect())
+        ),
+        epoch=1,
+    )
+    assert delivered == [("u0", b"v2!"), ("u1", b"new")]
+    assert pipe.last_metrics["n_tracked_paths"] == 2
+    assert pipe.poll().count() == 0
