@@ -166,10 +166,11 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     if args.list_only:
-        # metadata only: listing for printing must not open any file
-        listing = pipeline.default_listing()
-        for r in listing.orderBy("path").collect():
-            print(f"{r.size:>10}  {r.modification_time}  {r.path}")
+        # metadata only: the listing opens no file and runs no Spark job;
+        # times print in the driver's local time, as collected ones would
+        for r in pipeline.default_listing().sort_by("path").to_pylist():
+            mtime = r["modification_time"].astimezone().replace(tzinfo=None)
+            print(f"{r['size']:>10}  {mtime}  {r['path']}")
         return 0
 
     sink = _parquet_sink(args.sink_dir) if args.sink_dir else _print_sink

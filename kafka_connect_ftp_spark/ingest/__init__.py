@@ -6,13 +6,13 @@ new/changed files, and emits whole bodies ("update" mode) or appended
 suffixes ("tail" mode) as Kafka records, with per-file metadata persisted
 in Kafka Connect's offset store (FtpMonitor.scala:109-122).
 
-Here the same semantics are one batch plan per poll tick
-(``snapshot.snapshot``): listing ⟕ state on path → change filter → fetch
-of the changed files → delta extraction (binary substring + sha256 prefix
-check) → record projection, plus a merged new-state table.
-``PollPipeline`` runs it over a listing/fetch source (a local directory
-tree walked on the driver by default, or ``sources.ftp.FtpSource``)
-with parquet-backed state; ``streaming/ingest_stream.py`` wraps the same
+Here the same semantics are one tick (``snapshot.snapshot``): listing ⟕
+state on path → change filter → fetch of the changed files → delta
+extraction (binary substring + sha256 prefix check) → record projection,
+plus the tick's state updates. ``PollPipeline`` runs it over a
+listing/fetch source (a local directory tree walked on the driver by
+default, or ``sources.ftp.FtpSource``) with parquet-backed state held on
+the driver, where it also runs the join and the change filter; ``streaming/ingest_stream.py`` wraps the same
 tick in Structured Streaming.
 """
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -34,30 +35,22 @@ def with_content(schema: T.StructType) -> T.StructType:
 
 
 LISTING_SCHEMA = with_content(META_SCHEMA)
+# A source's driver-built listing (timestamps: UTC micros).
+META_ARROW_SCHEMA = to_arrow_schema(META_SCHEMA)
 
 
 def local_frame(
-    spark: SparkSession, schema: T.StructType, columns: dict[str, list] | None = None
+    spark: SparkSession, schema: T.StructType, table: pa.Table | None = None
 ) -> DataFrame:
-    """Driver-held ``columns`` (name -> values; timestamps as epoch
-    micros) as a frame over a ``LocalRelation``, shipped to the JVM as one
-    Arrow stream. Scanning it runs no Python stage (a ``createDataFrame``
-    of Python rows plans a Python RDD scan instead), and an empty one
-    (``columns`` None) lets the optimizer prune the joins and unions it
+    """A driver-held Arrow ``table`` (of ``schema``'s Arrow form) as a
+    frame over a ``LocalRelation``, shipped to the JVM as one Arrow
+    stream. Scanning it runs no Python stage (a ``createDataFrame`` of
+    Python rows plans a Python RDD scan instead), and an empty one
+    (``table`` None) lets the optimizer prune the joins and unions it
     feeds."""
-    import pyarrow as pa
-
-    if columns is None:
-        columns = {f.name: [] for f in schema.fields}
-    table = pa.Table.from_pydict(columns, schema=to_arrow_schema(schema))
+    if table is None:
+        table = to_arrow_schema(schema).empty_table()
     return spark.createDataFrame(table, schema)
-
-
-def meta_frame(spark: SparkSession, rows) -> DataFrame:
-    """Listing rows (path, size, modification time in epoch micros) as a
-    META_SCHEMA local relation, sorted by path."""
-    cols = map(list, zip(*sorted(rows)))
-    return local_frame(spark, META_SCHEMA, dict(zip(META_SCHEMA.names, cols)) or None)
 
 
 # The per-path keyed state — field-for-field the reference's Connect offset

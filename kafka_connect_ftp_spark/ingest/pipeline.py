@@ -8,20 +8,23 @@ exactly like Connect's offset store (SURVEY.md §3.3): a new PollPipeline
 over the same ``state_dir`` resumes incrementally.
 
 A source is two methods: ``listing(spark, monitors)`` returns metadata
-only (path, size, modification_time) and ``fetch(spark, meta)`` attaches
-``content`` to the rows it is given. The snapshot plan decides which
-rows those are — the reference's list-then-filter-then-fetch ordering
-(FtpMonitor.scala:110-119), so per-tick I/O is proportional to the
-delta, not the corpus. ``LocalTree`` (below) is the default source;
-``sources.ftp.FtpSource`` is the FTP one.
+only (path, size, modification_time) of the paths the monitors match,
+as a driver-built Arrow table (META_ARROW_SCHEMA), and ``fetch(spark,
+meta)`` attaches ``content`` to the rows of the frame it is given. The
+tick decides which rows those are — the reference's
+list-then-filter-then-fetch ordering (FtpMonitor.scala:110-119), so
+per-tick I/O is proportional to the delta, not the corpus. ``LocalTree``
+(below) is the default source; ``sources.ftp.FtpSource`` is the FTP one.
 
-A tick's Spark jobs are few and fixed: the listing is walked on the
-driver into a local relation (no job), one action materializes the
-fetched rows and collects their counts and state updates, and the sink
-delivers. The state is held on the driver as an Arrow table; each busy
-tick merges its updates into it and writes the next version with
-pyarrow, no Spark job. A backfill runs 2 jobs, a tick with changes 3
-(the state join's broadcast adds one), an idle tick 2.
+A tick's Spark jobs are few and fixed. The listing is walked on the
+driver (no job), and change detection runs there too, against the state
+held as an Arrow table (``snapshot.select_changed``, no job). Only the
+changed rows reach Spark: one action fetches them, keeps them for the
+records and collects their counts and state updates, and the sink
+delivers. Each busy tick merges its updates into the held state and
+writes the next version with pyarrow, no Spark job. A backfill or a
+tick with changes runs 2 jobs (the action and the sink's write); an
+idle tick runs none.
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ import os
 import re
 import shutil
 import time as _time
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 from functools import partial
 
 import pyarrow as pa
@@ -39,18 +42,16 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from kafka_connect_ftp_spark.ingest.model import (
+    META_ARROW_SCHEMA,
     STATE_ARROW_SCHEMA,
     STATE_SCHEMA,
     MonitoredPath,
-    meta_frame,
+    local_frame,
     monitors_regex,
     walk_roots,
     with_content,
 )
-from kafka_connect_ftp_spark.ingest.snapshot import TickExprs, empty_state, snapshot
-
-# load_state's version argument when the caller has not read the marker
-_UNREAD = object()
+from kafka_connect_ftp_spark.ingest.snapshot import TickExprs, snapshot
 
 
 def _local_fetch(meta: DataFrame) -> DataFrame:
@@ -60,12 +61,12 @@ def _local_fetch(meta: DataFrame) -> DataFrame:
     column passes through. A file that vanished between listing and
     read is skipped (the rotated-file rule).
 
-    The rows arrive in the state join's partitions: the listing's few
-    when the state is broadcast, up to the shuffle's count when it is
-    too large and the join sort-merges. ``coalesce`` (no shuffle) caps
-    them at one per core, so the Python fetch and everything downstream
-    of it (sink files, state files) does not pay per-partition overhead
-    for a small delta."""
+    A poll tick's rows arrive as a local relation, at most one partition
+    per core; the lazy tick's arrive in its state join's partitions, up
+    to the shuffle's count when the join sort-merges. ``coalesce`` (no
+    shuffle) caps them at one per core, so the Python fetch and
+    everything downstream of it (sink files) does not pay per-partition
+    overhead for a small delta."""
 
     def fetch_partition(batches):
         for pdf in batches:
@@ -98,16 +99,18 @@ def _hidden(name: str) -> bool:
     )
 
 
-def _walk_files(root: str) -> Iterator[tuple[str, int, int]]:
-    """(path, size, modification time in epoch micros truncated to ms)
-    of every file under ``root``; hidden names are neither listed nor
-    descended into. An entry removed while the walk runs is skipped, as
-    if it had gone before the walk."""
-    stack = [root]
+def _walk_files(roots: list[str], rx: re.Pattern) -> pa.Table:
+    """The path, size and modification time (epoch micros truncated to
+    ms) of every file under ``roots`` that ``rx`` matches, as columns of
+    one META_ARROW_SCHEMA table; hidden names are neither listed nor
+    descended into. A missing root lists as empty, and an entry removed
+    while the walk runs is skipped, as if it had gone before the walk."""
+    paths, sizes, mtimes = [], [], []
+    stack = list(roots)
     while stack:
         try:
             entries = list(os.scandir(stack.pop()))
-        except FileNotFoundError:
+        except (FileNotFoundError, NotADirectoryError):
             continue
         for entry in entries:
             if _hidden(entry.name):
@@ -115,32 +118,28 @@ def _walk_files(root: str) -> Iterator[tuple[str, int, int]]:
             try:
                 if entry.is_dir():
                     stack.append(entry.path)
-                else:
+                elif rx.match(entry.path):
                     st = entry.stat()
-                    yield entry.path, st.st_size, st.st_mtime_ns // 1_000_000 * 1000
+                    paths.append(entry.path)
+                    sizes.append(st.st_size)
+                    mtimes.append(st.st_mtime_ns // 1_000_000 * 1000)
             except FileNotFoundError:
                 continue
+    return pa.Table.from_arrays([paths, sizes, mtimes], schema=META_ARROW_SCHEMA)
 
 
 class LocalTree:
     """The local (or driver-mounted shared-FS) directory tree as a source."""
 
-    def listing(self, spark: SparkSession, monitors: Sequence[MonitoredPath]) -> DataFrame:
+    def listing(self, spark: SparkSession, monitors: Sequence[MonitoredPath]) -> pa.Table:
         """The monitors' disjoint base dirs, walked on the driver
-        (``os.scandir``) into a local relation: no Spark job and no file
+        (``os.scandir``) into an Arrow table: no Spark job and no file
         opened. It lists what a ``binaryFile`` scan of the dirs with
         ``recursiveFileLookup`` lists — the same hidden-name rule, mtimes
         at ms — filtered by the monitors' regex. A missing monitored dir
         lists as empty, like FTP LIST on a nonexistent path
         (FtpFileLister.scala:37-50 None case)."""
-        rx = re.compile(monitors_regex(monitors))
-        return meta_frame(spark, (
-            row
-            for root in walk_roots(monitors)
-            if os.path.isdir(root)
-            for row in _walk_files(root)
-            if rx.match(row[0])
-        ))
+        return _walk_files(walk_roots(monitors), re.compile(monitors_regex(monitors)))
 
     def fetch(self, spark: SparkSession, meta: DataFrame) -> DataFrame:
         return _local_fetch(meta)
@@ -158,9 +157,11 @@ class PollPipeline:
     updates into it and writes the whole table as the next version with
     pyarrow. The driver therefore holds the whole state, ~125 bytes plus
     the path's length per tracked path (~180 MB at 10^6 paths of 56
-    characters), and rewrites it on each busy tick. The state join still
-    scans the committed version with Spark. A tick runs 2 Spark jobs on
-    a backfill, 3 with changes and 2 when idle; the state costs none.
+    characters), and rewrites it on each busy tick. Change detection
+    joins the listing with the held table on the driver, so only changed
+    paths reach Spark. A tick runs 2 Spark jobs on a backfill or with
+    changes (the materializing action and the sink's write) and none
+    when idle; the state costs none.
 
     The version writes and the marker/prune bookkeeping are driver-local
     file IO, so ``state_dir`` must be driver-local or a driver-mounted
@@ -202,9 +203,11 @@ class PollPipeline:
         # right after the flip, hence the clamp at 2.
         self.keep_versions = max(2, keep_versions)
         self._last_records: DataFrame | None = None
-        # the committed state version (STATE_ARROW_SCHEMA), read on this
-        # instance's first tick and replaced by each commit
+        # the committed state version (STATE_ARROW_SCHEMA) and its name
+        # (None before the first commit), read by this instance's first
+        # load_state and replaced by each commit
         self._state: pa.Table | None = None
+        self._version: str | None = None
         self.last_metrics: dict | None = None
         # the tick plan's Column expressions, rebuilt only when ``now``
         # changes (see TickExprs)
@@ -223,16 +226,20 @@ class PollPipeline:
         with open(self._marker) as fh:
             return fh.read().strip()
 
-    def load_state(self, version=_UNREAD) -> DataFrame:
-        """The current state version as a Spark scan; ``version`` is the
-        CURRENT marker as ``_read_marker`` returned it, if the caller has
-        read it."""
-        version = self._read_marker() if version is _UNREAD else version
-        if version is None:
-            return empty_state(self.spark)
-        return self.spark.read.schema(STATE_SCHEMA).parquet(
-            os.path.join(self.state_dir, version)
-        )
+    def load_state(self) -> pa.Table:
+        """The committed state version (STATE_ARROW_SCHEMA), held on the
+        driver: read with pyarrow on this instance's first call, then
+        the table the last commit made current."""
+        if self._state is None:
+            self._version = self._read_marker()
+            self._state = (
+                STATE_ARROW_SCHEMA.empty_table()
+                if self._version is None
+                else pq.read_table(
+                    os.path.join(self.state_dir, self._version), schema=STATE_ARROW_SCHEMA
+                )
+            )
+        return self._state
 
     def _write_version(self, state: pa.Table, version: str) -> None:
         """Write ``state`` as state version ``version``, one parquet file.
@@ -249,6 +256,7 @@ class PollPipeline:
         with open(tmp, "w") as fh:
             fh.write(version)
         os.replace(tmp, self._marker)
+        self._version = version
         self._prune_versions(current=int(version[1:]))
 
     def _prune_versions(self, *, current: int) -> None:
@@ -261,7 +269,7 @@ class PollPipeline:
             if m and int(m.group(1)) <= cutoff:
                 shutil.rmtree(os.path.join(self.state_dir, entry), ignore_errors=True)
 
-    def default_listing(self) -> DataFrame:
+    def default_listing(self) -> pa.Table:
         """The source's metadata-only listing of the monitored trees."""
         return self.source.listing(self.spark, self.monitors)
 
@@ -282,31 +290,24 @@ class PollPipeline:
         no file commits nothing.
         """
         t0 = _time.monotonic()
-        version = self._read_marker()
-        if self._state is None:
-            self._state = (
-                STATE_ARROW_SCHEMA.empty_table()
-                if version is None
-                else pq.read_table(os.path.join(self.state_dir, version), schema=STATE_ARROW_SCHEMA)
-            )
+        state = self.load_state()
         exprs = self._exprs
-        if exprs is None or exprs.key != (tuple(self.monitors), now, self.max_age_seconds):
-            exprs = self._exprs = TickExprs(
-                self.monitors, now=now, max_age_seconds=self.max_age_seconds
-            )
+        if exprs is None or exprs.key != (tuple(self.monitors), now):
+            exprs = self._exprs = TickExprs(self.monitors, now=now)
         records, updates, stats = snapshot(
             self.default_listing(),
-            self.load_state(version),
+            state,
             self.monitors,
+            spark=self.spark,
             fetch=partial(self.source.fetch, self.spark),
             max_age_seconds=self.max_age_seconds,
             now=now,
             max_files=self.max_files_per_poll,
             exprs=exprs,
-            # one action materializes the fetched rows feeding the
-            # records and collects the state updates: one listing+fetch
-            # per tick, and the committed hash always matches the
-            # emitted record
+            # change detection on the driver, then one action
+            # materializes the fetched rows feeding the records and
+            # collects the state updates: one fetch per tick, and the
+            # committed hash always matches the emitted record
             checkpoint=True,
         )
         # Per-tick operational metrics (the connector logs a files-count per
@@ -316,12 +317,12 @@ class PollPipeline:
         if self.drop_empty:
             records = records.filter(exprs.nonempty)
         if stats.n_records:
+            version = self._version
             next_version = f"v{int(version[1:]) + 1}" if version else "v0"
             # last write wins: the tick's updates replace their paths'
             # rows; untouched state carries over — the reference never
             # deletes state (ConnectFileMetaDataStore.scala:26)
-            held = self._state
-            carried = held.filter(pc.invert(pc.is_in(held["path"], value_set=updates["path"])))
+            carried = state.filter(pc.invert(pc.is_in(state["path"], value_set=updates["path"])))
             # one chunk again, else every tick would add one for the next
             # tick's filter to walk
             new_state = pa.concat_tables([carried, updates]).combine_chunks()
@@ -329,12 +330,9 @@ class PollPipeline:
             # failed sink leaves an orphan version that the retry
             # overwrites, and a failed write delivers nothing
             self._write_version(new_state, next_version)
-            if sink and n_records:
-                sink(records, epoch)
-            self._flip(next_version)
-            self._state = new_state
             if self.keep_history:
-                # one file per version: the version's changed rows
+                # one file per version, written with it: the version's
+                # changed rows (state_history reads committed ones only)
                 hdir = os.path.join(self.state_dir, "history")
                 os.makedirs(hdir, exist_ok=True)
                 changed = pa.array(stats.changed_paths, pa.string())
@@ -342,6 +340,10 @@ class PollPipeline:
                     updates.filter(pc.is_in(updates["path"], value_set=changed)),
                     os.path.join(hdir, f"{next_version}.parquet"),
                 )
+            if sink and n_records:
+                sink(records, epoch)
+            self._flip(next_version)
+            self._state = new_state
         # else: idle tick, nothing fetched — the current version stands.
         # The previous tick's localCheckpoint blocks are reclaimed by the
         # ContextCleaner once unreferenced — keep only the latest.
@@ -357,9 +359,17 @@ class PollPipeline:
         return records
 
     def state_history(self) -> DataFrame:
-        """All persisted state versions (keep_history=True): one row per
+        """All committed state versions (keep_history=True): one row per
         (path, version) — the SCD2 audit trail. valid_from = last_modified,
-        superseded when a newer last_inspected exists for the path."""
-        return self.spark.read.schema(STATE_SCHEMA).parquet(
-            os.path.join(self.state_dir, "history")
-        )
+        superseded when a newer last_inspected exists for the path. A
+        version written by a tick that failed before its commit is not
+        read."""
+        hdir, current = os.path.join(self.state_dir, "history"), self._read_marker()
+        files = [
+            os.path.join(hdir, name)
+            for name in (os.listdir(hdir) if current and os.path.isdir(hdir) else [])
+            if int(name[1:].removesuffix(".parquet")) <= int(current[1:])
+        ]
+        if not files:
+            return local_frame(self.spark, STATE_SCHEMA)
+        return self.spark.read.schema(STATE_SCHEMA).parquet(*files)

@@ -33,11 +33,16 @@ Semantics are byte-exact with FtpMonitor.handleFetchedFile
 - state ``offset`` stays -1 (FileMetaData.scala:12 default; the reference
   never overwrites it).
 
-Scale: J1 joins the listing with the state table; content bytes never
-shuffle (delta extraction is map-side column logic on the fetched rows).
-Without ``checkpoint`` the merge of the tick's updates into the carried
-state is the plan's other join; with it the updates come back to the
-driver, which merges them (``PollPipeline``).
+Two forms run these steps. ``PollPipeline`` runs J1, F1, F2 and L1 on
+the driver (``select_changed``): the listing and the state are Arrow
+tables there already, so only the surviving rows, with their paths'
+previous state, reach Spark. A tick with survivors runs one Spark job
+(the materializing action), and one where none survives runs none. The
+lazy form (``checkpoint=False``) runs the whole tick as one plan over
+listing and state frames — the form for listings that already carry
+content; ``tests/test_snapshot_property.py`` pins the two forms'
+selections equal. Content bytes never shuffle in either: delta
+extraction is map-side column logic on the fetched rows.
 
 Unlike the reference, bodies larger than 2 GiB are rejected rather than
 silently truncated (the reference's ``.toInt`` overflow,
@@ -46,21 +51,36 @@ FtpMonitor.scala:77-80).
 
 from __future__ import annotations
 
+import datetime as dt
+import time
 from collections.abc import Callable, Sequence
 from typing import NamedTuple
+from zoneinfo import ZoneInfo
 
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from kafka_connect_ftp_spark.ingest.model import (
+    META_SCHEMA,
+    RECORD_SCHEMA,
     STATE_ARROW_SCHEMA,
     STATE_SCHEMA,
     MonitoredPath,
     local_frame,
     monitors_regex,
 )
+
+# The listing rows a tick fetches, each with its path's previous state
+# (null for a new path): what ``select_changed`` ships to Spark.
+_PREV = ("size", "hash", "first_fetched", "last_modified")
+SELECTED_SCHEMA = T.StructType(
+    META_SCHEMA.fields + [T.StructField(f"p_{c}", STATE_SCHEMA[c].dataType, True) for c in _PREV]
+)
+SELECTED_ARROW_SCHEMA = to_arrow_schema(SELECTED_SCHEMA)
 
 
 def empty_state(spark: SparkSession) -> DataFrame:
@@ -80,8 +100,8 @@ class TickStats(NamedTuple):
 
 
 class TickExprs:
-    """The Column expressions of a tick's plan for one ``(monitors, now,
-    max_age_seconds)``.
+    """The Column expressions of a tick's plan from the fetched rows on,
+    for one ``(monitors, now)``.
 
     Building a Column is a JVM round trip per call, and about ten more
     for PySpark's call-site capture, so a tick that built its own spent
@@ -90,39 +110,12 @@ class TickExprs:
     no frame, so no tick's plan keeps another's alive.
     """
 
-    def __init__(
-        self,
-        monitors: Sequence[MonitoredPath],
-        *,
-        now: str | None = None,
-        max_age_seconds: float | None = None,
-    ) -> None:
+    def __init__(self, monitors: Sequence[MonitoredPath], *, now: str | None = None) -> None:
         if not monitors:
             raise ValueError("at least one MonitoredPath is required")
-        self.key = (tuple(monitors), now, max_age_seconds)
-        now_col = F.lit(now).cast("timestamp") if now else F.current_timestamp()
+        self.key = (tuple(monitors), now)
+        self.now = now_col = F.lit(now).cast("timestamp") if now else F.current_timestamp()
         path, size, p_size, p_hash = F.col("path"), F.col("size"), F.col("p_size"), F.col("p_hash")
-
-        self.prev = [
-            F.col(c).alias(f"p_{c}")
-            for c in ("path", "size", "timestamp", "hash", "first_fetched", "last_modified")
-        ]
-        self.state_join = path == F.col("p_path")
-        # the listing's monitor match (the local tree's walk applies it
-        # already; an FTP listing does not), the max-age cut F1 and
-        # requires-fetch F2 (size/timestamp change), as one filter over
-        # the state join: the optimizer pushes the listing-only terms
-        # below the join
-        keep = path.rlike(monitors_regex(monitors))
-        if max_age_seconds is not None:
-            keep = keep & (
-                F.col("modification_time") >= now_col - F.make_interval(secs=F.lit(max_age_seconds))
-            )
-        self.requires_fetch = keep & (
-            F.col("p_path").isNull()
-            | (p_size != size)
-            | (F.col("p_timestamp") != F.col("modification_time"))
-        )
 
         # oversized bodies: fail loudly instead of mis-slicing (module doc)
         content = F.when(size <= F.lit(2**31 - 1), F.col("content")).otherwise(
@@ -207,11 +200,75 @@ class TickExprs:
         self.collected = [F.length(body).alias("n"), *self.updates]
 
 
+def select_changed(
+    listing: pa.Table,
+    state: pa.Table,
+    *,
+    min_mtime_us: int | None = None,
+    max_files: int | None = None,
+) -> pa.Table:
+    """J1, F1, F2 and L1 over driver-held Arrow tables: the ``listing``
+    rows (META_ARROW_SCHEMA) this tick fetches, each with its path's
+    previous ``state`` row (STATE_ARROW_SCHEMA) as the ``p_*`` columns
+    of SELECTED_ARROW_SCHEMA. They keep the listing's order, or are
+    oldest first when ``max_files`` cuts them. ``min_mtime_us`` is the
+    max-age cut, in UTC epoch micros. Each listed path costs one hash
+    lookup; only the survivors' state rows are copied."""
+    idx = pc.index_in(listing["path"], value_set=state["path"])
+    # F2: new, or size or timestamp changed (FtpMonitor.scala:35-46)
+    keep = pc.or_kleene(
+        pc.is_null(idx),
+        pc.or_(
+            pc.not_equal(listing["size"], state["size"].take(idx)),
+            pc.not_equal(listing["modification_time"], state["timestamp"].take(idx)),
+        ),
+    )
+    if min_mtime_us is not None:
+        # F1: modified within the max age
+        cutoff = pa.scalar(min_mtime_us, listing["modification_time"].type)
+        keep = pc.and_(keep, pc.greater_equal(listing["modification_time"], cutoff))
+    picked = listing.append_column("idx", idx).filter(keep)
+    if max_files is not None and picked.num_rows > max_files:
+        # L1 caps PATHS (the listing has one row per path): a file
+        # matched by two monitors keeps both of its records. OLDEST
+        # change first (review 9b): a pure path ordering let a set of
+        # constantly-churning early-sorting paths re-claim every slot
+        # each tick, starving later paths forever; with mtime-ascending
+        # ordering a churning file's fresh timestamp sends it to the
+        # back of the queue, so every pending change eventually drains
+        # (the reference's buffer delivers everything listed before
+        # re-listing — no starvation there either). Path tie-break keeps
+        # the cut deterministic.
+        order = pc.sort_indices(
+            picked, sort_keys=[("modification_time", "ascending"), ("path", "ascending")]
+        )
+        picked = picked.take(order[:max_files])
+    prev = state.take(picked["idx"]).select(list(_PREV))
+    meta = picked.select(META_SCHEMA.names)
+    return pa.Table.from_arrays(meta.columns + prev.columns, schema=SELECTED_ARROW_SCHEMA)
+
+
+_EPOCH = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+
+
+def _now_micros(spark: SparkSession, now: str | None) -> int:
+    """The max-age clock in UTC epoch micros: the driver's, or ``now``
+    (an ISO time) read as the lazy form's cast reads it, in the session
+    time zone unless it names its own."""
+    if now is None:
+        return time.time_ns() // 1000
+    t = dt.datetime.fromisoformat(now)
+    if t.tzinfo is None:
+        t = t.replace(tzinfo=ZoneInfo(spark.conf.get("spark.sql.session.timeZone")))
+    return (t - _EPOCH) // dt.timedelta(microseconds=1)
+
+
 def snapshot(
-    listing: DataFrame,
-    state: DataFrame,
+    listing: DataFrame | pa.Table,
+    state: DataFrame | pa.Table,
     monitors: Sequence[MonitoredPath],
     *,
+    spark: SparkSession | None = None,
     fetch: Callable[[DataFrame], DataFrame] | None = None,
     max_age_seconds: float | None = None,
     now: str | None = None,
@@ -224,7 +281,7 @@ def snapshot(
     ``checkpoint`` ``(records, updates, stats)``.
 
     ``listing`` has one row per path (path, size, modification_time); a
-    listing that also carries ``content`` (LISTING_SCHEMA) needs no
+    listing frame that also carries ``content`` (LISTING_SCHEMA) needs no
     fetch. Otherwise ``fetch`` attaches ``content`` to the rows it is
     given, keeping their other columns and dropping rows whose file
     vanished — a source's ``fetch(spark, meta)``. It only ever sees the
@@ -243,66 +300,86 @@ def snapshot(
     ``maxFilesPerTrigger`` on the source; this explicit form exists for
     batch-mode parity and bounded-memory polls.)
 
-    ``checkpoint`` materializes the tick with ONE Spark action before
-    returning: the fetched rows are kept (``localCheckpoint``) for
+    Without ``checkpoint`` the tick is one lazy plan over frames. With
+    it, ``listing`` (META_ARROW_SCHEMA) and ``state`` (STATE_ARROW_SCHEMA)
+    are driver-held Arrow tables, ``select_changed`` picks the rows to
+    fetch (the max-age clock is the driver's unless ``now`` pins it), and
+    the tick runs on ``spark`` with ONE Spark action, or none when no row
+    survives: the fetched rows are kept (``localCheckpoint``) for
     ``records``, and a narrow per-record projection (body length plus
     its path's state update) is collected as Arrow. The ``TickStats``
     are counted from it, and ``updates`` is its state update per fetched
-    path, a ``STATE_ARROW_SCHEMA`` table for the caller to merge
-    (last write wins). ``records`` then reads the kept rows, so it
-    neither re-lists nor re-fetches, and each committed hash is the one
-    its record was cut with.
+    path, a ``STATE_ARROW_SCHEMA`` table for the caller to merge (last
+    write wins). ``records`` then reads the kept rows, so it neither
+    re-lists nor re-fetches, and each committed hash is the one its
+    record was cut with.
 
     ``exprs`` are the plan's prebuilt Column expressions for these
-    ``monitors``, ``now`` and ``max_age_seconds`` (``TickExprs``); a
-    caller that runs many ticks passes the same ones to each, and one is
-    built when none is given.
+    ``monitors`` and ``now`` (``TickExprs``); a caller that runs many
+    ticks passes the same ones to each, and one is built when none is
+    given.
     """
     if exprs is None:
-        exprs = TickExprs(monitors, now=now, max_age_seconds=max_age_seconds)
-    elif exprs.key != (tuple(monitors), now, max_age_seconds):
-        raise ValueError("exprs were built for other monitors, now or max_age_seconds")
-    has_content = "content" in listing.columns
-    if fetch is None and not has_content:
-        raise ValueError("a listing without content needs a fetch")
-
-    fetched = (
-        listing.join(state.select(*exprs.prev), exprs.state_join, "left")
-        .filter(exprs.requires_fetch)
-        .drop("p_path", "p_timestamp")
-    )
-    if max_files is not None:
-        # the listing has one row per path, so this caps PATHS: a file
-        # matched by two monitors keeps both of its records (monitors
-        # are tagged below). OLDEST change first (review 9b): a pure
-        # path ordering let a set of constantly-churning early-sorting
-        # paths re-claim every slot each tick, starving later paths
-        # forever; with mtime-ascending ordering a churning file's fresh
-        # timestamp sends it to the back of the queue, so every pending
-        # change eventually drains (the reference's buffer delivers
-        # everything listed before re-listing — no starvation there
-        # either). Path tie-break keeps the cut deterministic.
-        fetched = fetched.orderBy("modification_time", "path").limit(max_files)
-    if not has_content:
-        fetched = fetch(fetched)
-    per_path = fetched.select(*exprs.per_path)
+        exprs = TickExprs(monitors, now=now)
+    elif exprs.key != (tuple(monitors), now):
+        raise ValueError("exprs were built for other monitors or now")
 
     if checkpoint:
+        if spark is None or fetch is None:
+            raise ValueError("a checkpointed tick needs the session and a fetch")
+        min_mtime_us = None
+        if max_age_seconds is not None:
+            # at the lazy form's microsecond precision
+            min_mtime_us = _now_micros(spark, now) - round(max_age_seconds * 1_000_000)
+        picked = select_changed(listing, state, min_mtime_us=min_mtime_us, max_files=max_files)
+        if not picked.num_rows:
+            empty = TickStats(0, 0, 0, [])
+            return local_frame(spark, RECORD_SCHEMA), STATE_ARROW_SCHEMA.empty_table(), empty
         # Keep the fetched per-path rows when they are first computed
         # (the collect below) and derive the records from them: the
-        # sink's action would otherwise re-list and re-fetch every
-        # changed file (2x RETR per tick in FTP mode) — and a file
-        # changing between the two scans would commit a hash the emitted
-        # record never saw. The checkpoint also truncates the plan,
-        # which keeps long-running poll loops' plans from growing.
-        # Durability note (review 9b): localCheckpoint blocks live on
-        # EXECUTORS — under dynamic allocation / spot reclamation a lost
-        # executor makes the tick unrecoverable mid-poll (the poll
+        # sink's action would otherwise re-fetch every changed file (2x
+        # RETR per tick in FTP mode) — and a file changing between the
+        # two reads would commit a hash the emitted record never saw.
+        # The checkpoint also truncates the plan, which keeps long-running
+        # poll loops' plans from growing. Under it are only the local
+        # relation and the fetch: no exchange, so building it runs no
+        # query stage. Durability note (review 9b): localCheckpoint blocks
+        # live on EXECUTORS — under dynamic allocation / spot reclamation
+        # a lost executor makes the tick unrecoverable mid-poll (the poll
         # fails; at-least-once delivery re-derives next tick, so no data
-        # is lost, but the tick is). Deployments that cannot retry a
-        # tick should set a reliable spark checkpoint dir and swap this
-        # for df.checkpoint().
-        per_path = per_path.localCheckpoint(eager=False)
+        # is lost, but the tick is). Deployments that cannot retry a tick
+        # should set a reliable spark checkpoint dir and swap this for
+        # df.checkpoint().
+        fetched = fetch(local_frame(spark, SELECTED_SCHEMA, picked))
+        per_path = fetched.select(*exprs.per_path).localCheckpoint(eager=False)
+    else:
+        # select_changed as a plan, plus the monitors' match (a listing
+        # built elsewhere may hold paths no monitor matches), as one
+        # filter over the state join: the optimizer pushes the
+        # listing-only terms below the join
+        path, mtime = F.col("path"), F.col("modification_time")
+        keep = path.rlike(monitors_regex(monitors))
+        if max_age_seconds is not None:
+            keep = keep & (mtime >= exprs.now - F.make_interval(secs=F.lit(max_age_seconds)))
+        keep = keep & (
+            F.col("p_path").isNull()
+            | (F.col("p_size") != F.col("size"))
+            | (F.col("p_timestamp") != mtime)
+        )
+        prev = state.select(*(F.col(c).alias(f"p_{c}") for c in ("path", "timestamp", *_PREV)))
+        fetched = (
+            listing.join(prev, path == F.col("p_path"), "left")
+            .filter(keep)
+            .drop("p_path", "p_timestamp")
+        )
+        if max_files is not None:
+            # oldest first, path tie-break (see select_changed)
+            fetched = fetched.orderBy("modification_time", "path").limit(max_files)
+        if "content" not in listing.columns:
+            if fetch is None:
+                raise ValueError("a listing without content needs a fetch")
+            fetched = fetch(fetched)
+        per_path = fetched.select(*exprs.per_path)
 
     tagged = per_path.select(*exprs.tagged)
     records = tagged.select(*exprs.records)

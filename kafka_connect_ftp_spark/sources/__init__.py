@@ -1,7 +1,7 @@
 """Listing/fetch sources for the ingest engine.
 
-A source has two methods: ``listing(spark, monitors)`` (metadata only)
-and ``fetch(spark, meta)`` (attach content). ``LocalTree`` (in
+A source has two methods: ``listing(spark, monitors)`` (metadata only,
+a driver-built Arrow table) and ``fetch(spark, meta)`` (attach content). ``LocalTree`` (in
 ingest/pipeline.py) walks a local tree on the driver; ``FtpSource`` adapts
 a live FTP remote via ftplib, so the snapshot plan is source-agnostic.
 """

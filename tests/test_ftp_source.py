@@ -10,7 +10,7 @@ import re
 
 import pytest
 
-from kafka_connect_ftp_spark.ingest.model import MonitoredPath
+from kafka_connect_ftp_spark.ingest.model import META_SCHEMA, MonitoredPath, local_frame
 from kafka_connect_ftp_spark.ingest.pipeline import PollPipeline
 from kafka_connect_ftp_spark.ingest.snapshot import empty_state, snapshot
 from kafka_connect_ftp_spark.sources.ftp import FtpSource
@@ -76,6 +76,11 @@ TREE = {
 }
 
 
+def listing_frame(spark, source, monitors):
+    """The source's driver-built listing as a frame."""
+    return local_frame(spark, META_SCHEMA, source.listing(spark, monitors))
+
+
 @pytest.fixture
 def src():
     files = dict(TREE)
@@ -97,7 +102,7 @@ def test_fixed_path_listing(src):
 def test_listing_dataframe_and_distributed_fetch(spark, src):
     source, _ = src
     monitors = [MonitoredPath("/a/dirb/path/", topic="t")]
-    meta = source.listing(spark, monitors)
+    meta = listing_frame(spark, source, monitors)
     assert {r.path for r in meta.collect()} == {
         "/a/dirb/path/file3.txt",
         "/a/dirb/path/file4.csv",
@@ -113,7 +118,7 @@ def test_listing_dataframe_and_distributed_fetch(spark, src):
 def test_ftp_listing_through_snapshot_plan(spark, src):
     source, files = src
     monitors = [MonitoredPath("/a/dirb/path/", topic="files")]
-    listing = source.fetch(spark, source.listing(spark, monitors))
+    listing = source.fetch(spark, listing_frame(spark, source, monitors))
     records, state = snapshot(
         listing, empty_state(spark), monitors, now="2024-06-01 12:00:00"
     )
@@ -125,7 +130,7 @@ def test_ftp_listing_through_snapshot_plan(spark, src):
     # mutate the remote; second tick sees only the change
     files["/a/dirb/path/file3.txt"] = b"three+more"
     source2 = FtpSource(host="fake", _client_factory=lambda: FakeFtp(files, mtime="20240601120100"))
-    listing2 = source2.fetch(spark, source2.listing(spark, monitors))
+    listing2 = source2.fetch(spark, listing_frame(spark, source2, monitors))
     state = spark.createDataFrame(state.collect(), state.schema)
     records2, _ = snapshot(
         listing2, state, monitors, now="2024-06-01 12:01:00", drop_empty=True
@@ -230,21 +235,11 @@ def test_parse_list_line_variants():
     assert (name, is_dir) == ("xattr_dir", True)
 
 
-def test_distributed_listing_matches_driver_walk(spark, src):
-    source, _ = src
-    monitors = [MonitoredPath("/a/dir?/path/*", topic="t")]
-    driver_side = source.listing(spark, monitors)
-    distributed = source.listing_distributed(spark, monitors, partitions=2)
-    want = {(r.path, r.size) for r in driver_side.collect()}
-    got = {(r.path, r.size) for r in distributed.collect()}
-    assert got == want and len(got) == 3
-
-
-def test_listing_frames_are_local_relations_equal_to_list_built_frames(spark):
-    """Both listing frames are Arrow-built local relations (no Python
-    stage scans them), and collect to exactly the rows — timestamps
-    included — that ``createDataFrame`` of the walked tuples gives."""
-    from kafka_connect_ftp_spark.ingest.model import META_SCHEMA
+def test_listing_table_equals_list_built_frame(spark):
+    """The listing is a driver-built Arrow table that collects to
+    exactly the rows — timestamps included — that ``createDataFrame``
+    of the walked tuples gives."""
+    from kafka_connect_ftp_spark.ingest.model import META_ARROW_SCHEMA
     from kafka_connect_ftp_spark.sources.ftp import _walk
 
     files = dict(TREE, **{"/a/root.txt": b"r", "/a/zz.txt": b"zz"})
@@ -260,17 +255,9 @@ def test_listing_frames_are_local_relations_equal_to_list_built_frames(spark):
         return spark.createDataFrame(sorted(rows), META_SCHEMA).collect()
 
     walked = list(_walk(FakeFtp(files, mtimes=mtimes), "/a", re.compile(r".*")))
-    listing = source.listing(spark, monitors)
-    assert "LocalRelation" in listing._jdf.queryExecution().optimizedPlan().toString()
+    assert source.listing(spark, monitors).schema == META_ARROW_SCHEMA
+    listing = listing_frame(spark, source, monitors).orderBy("path")
     assert listing.collect() == list_built(walked)
-
-    # listing_distributed's root-level files: the driver-side part
-    distributed = source.listing_distributed(spark, monitors, partitions=2)
-    roots = [r for r in walked if r[0].count("/") == 2]
-    assert [r.path for r in list_built(roots)] == ["/a/root.txt", "/a/zz.txt"]
-    got = {r.path: r for r in distributed.collect()}
-    assert [got[r.path] for r in list_built(roots)] == list_built(roots)
-    assert sorted(got.values()) == sorted(list_built(walked))
 
 
 class CountingFtp(FakeFtp):
@@ -406,7 +393,7 @@ def test_listing_walks_a_shared_tree_once_over_one_connection(spark):
         MonitoredPath("/a/dirb/path/", topic="all"),
         MonitoredPath("/a/dir?/path/*.txt", topic="txt"),
     ]
-    meta = FtpSource(host="fake", _client_factory=factory).listing(spark, monitors)
+    meta = listing_frame(spark, FtpSource(host="fake", _client_factory=factory), monitors)
     assert meta.columns == ["path", "size", "modification_time"]
     assert sorted(r.path for r in meta.collect()) == [
         "/a/dira/path/file1.txt", "/a/dirb/path/file3.txt", "/a/dirb/path/file4.csv",
@@ -446,3 +433,36 @@ def test_tls_connect_uses_ftps_and_prot_p(monkeypatch):
     src._connect()
     assert [c[0] for c in calls] == ["ctor", "connect", "login", "prot_p", "pasv"]
     assert ("connect", "secure.example", 21) in calls
+
+
+def test_busy_ftp_tick_job_budget(spark, tmp_path):
+    """A busy FTP tick runs the jobs a local one does: the fetch
+    coalesces the changed rows (no shuffle), so the materializing action
+    and the sink's write are all; an idle tick runs none."""
+    from kafka_connect_ftp_spark.streaming.ingest_stream import idempotent_parquet_sink
+    from tests.test_pipeline import _jobs
+
+    counter = str(tmp_path / "retrs.log")
+    files = {f"/j/f{i}": b"body%d" % i for i in range(12)}
+    mtimes = {}
+    pipe = PollPipeline(
+        spark, [MonitoredPath("/j/", topic="t")], str(tmp_path / "state"),
+        source=_counting_source(files, counter, mtimes),
+    )
+    sink = idempotent_parquet_sink(str(tmp_path / "out"))
+    backfill = _jobs(spark, lambda: pipe.poll(sink=sink, epoch=0))
+    assert _retrs(counter) == sorted(files)
+
+    changed = ["/j/f0", "/j/f5", "/j/f11"]
+    for p in changed:
+        files[p] += b"+"
+        mtimes[p] = "20240601120100"
+    busy = _jobs(spark, lambda: pipe.poll(sink=sink, epoch=1))
+    assert pipe.last_metrics["n_changed"] == 3
+    assert _retrs(counter) == sorted(changed)
+    idle = _jobs(spark, lambda: pipe.poll(sink=sink, epoch=2))
+
+    print(f"FTP jobs per tick: backfill {backfill}, busy {busy}, idle {idle}")
+    assert backfill <= 2
+    assert busy <= 2
+    assert idle == 0

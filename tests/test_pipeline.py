@@ -10,7 +10,14 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_connect_ftp_spark.ingest.model import MonitoredPath, glob_free_prefix
+from kafka_connect_ftp_spark.ingest.model import (
+    META_ARROW_SCHEMA,
+    META_SCHEMA,
+    STATE_SCHEMA,
+    MonitoredPath,
+    glob_free_prefix,
+    local_frame,
+)
 from kafka_connect_ftp_spark.ingest.pipeline import PollPipeline
 
 
@@ -35,6 +42,11 @@ def monitors(base):
 
 
 T0 = 1717243200.0  # 2024-06-01 12:00:00 UTC
+
+
+def state_rows(spark, pipe):
+    """The pipeline's committed state as collected Spark rows."""
+    return local_frame(spark, STATE_SCHEMA, pipe.load_state()).collect()
 
 
 def test_poll_cycle_with_restart(spark, tree, tmp_path):
@@ -114,12 +126,12 @@ def test_file_matched_by_two_monitors_is_one_state_row(spark, tree, tmp_path):
     pipe = PollPipeline(spark, mons, str(tmp_path / "state"))
     assert pipe.poll().count() == 2
     assert pipe.last_metrics["n_tracked_paths"] == 1
-    assert pipe.load_state().count() == 1
+    assert pipe.load_state().num_rows == 1
     write(tree, "logs/a.log", b"xy", T0 + 60)
     got = sorted((r.topic, r.key_offset, bytes(r.value)) for r in pipe.poll().collect())
     assert got == [("all", 0, b"xy"), ("logs", 1, b"y")]
     assert pipe.last_metrics["n_tracked_paths"] == 1
-    assert pipe.load_state().count() == 1
+    assert pipe.load_state().num_rows == 1
 
 
 def test_glob_base():
@@ -162,6 +174,42 @@ def test_state_history_scd2(spark, tree, tmp_path):
     hist = sorted((r.size, r.hash) for r in pipe.state_history().collect())
     assert len(hist) == 2 and hist[0][0] == 2 and hist[1][0] == 9
     # hashes are distinct versions of the same path
+    assert hist[0][1] != hist[1][1]
+
+
+@pytest.mark.parametrize("crash", ["before_flip", "after_flip"])
+def test_state_history_holds_each_change_once_across_a_crash(
+    spark, tree, tmp_path, monkeypatch, crash
+):
+    """The process dies in the commit, just before or just after the
+    CURRENT flip, and a restarted pipeline polls again: the history
+    holds each committed change exactly once, and never a version the
+    marker has not reached."""
+    state_dir = str(tmp_path / "state")
+    mons = [MonitoredPath(f"{tree}/updates/", topic="u")]
+    write(tree, "updates/u0", b"v1", T0)
+    PollPipeline(spark, mons, state_dir, keep_history=True).poll()
+    write(tree, "updates/u0", b"v2-longer", T0 + 60)
+
+    flip = PollPipeline._flip
+
+    def crashing_flip(self, version):
+        if crash == "after_flip":
+            flip(self, version)
+        raise RuntimeError("driver lost")
+
+    monkeypatch.setattr(PollPipeline, "_flip", crashing_flip)
+    with pytest.raises(RuntimeError, match="driver lost"):
+        PollPipeline(spark, mons, state_dir, keep_history=True).poll()
+    monkeypatch.undo()
+
+    restarted = PollPipeline(spark, mons, state_dir, keep_history=True)
+    sizes = sorted(r.size for r in restarted.state_history().collect())
+    assert sizes == ([2] if crash == "before_flip" else [2, 9])
+    restarted.poll()
+    restarted.poll()
+    hist = sorted((r.size, r.hash) for r in restarted.state_history().collect())
+    assert [size for size, _ in hist] == [2, 9]
     assert hist[0][1] != hist[1][1]
 
 
@@ -243,7 +291,7 @@ def test_state_version_retention_prunes_old_dirs(spark, tree, tmp_path):
     with open(os.path.join(state_dir, "CURRENT")) as fh:
         assert fh.read().strip() == "v3"
     # the surviving current version still loads and drives change detection
-    assert pipe.load_state().count() == 1
+    assert pipe.load_state().num_rows == 1
     assert pipe.poll().count() == 0  # nothing changed
 
 
@@ -334,8 +382,9 @@ def test_local_listing_matches_binary_file_scan(spark, tree, tmp_path):
         MonitoredPath(f"{tmp_path}/missing/", topic="none"),
     ]
 
-    got = LocalTree().listing(spark, monitors)
-    assert "LocalRelation" in got._jdf.queryExecution().optimizedPlan().toString()
+    listing = LocalTree().listing(spark, monitors)
+    assert listing.schema == META_ARROW_SCHEMA
+    got = local_frame(spark, META_SCHEMA, listing)
     oracle = (
         spark.read.format("binaryFile").option("recursiveFileLookup", "true").load([tree])
         .select(
@@ -367,12 +416,12 @@ def _jobs(spark, fn):
 
 
 def test_poll_job_budget(spark, tree, tmp_path):
-    """A tick's Spark jobs: the listing is a driver walk, one action
+    """A tick's Spark jobs: the listing is a driver walk and change
+    detection runs on the driver against the held state; one action
     materializes the fetch and collects its counts and state updates,
-    the sink delivers; the state version is written on the driver. A
-    backfill has no state to join; an idle tick writes nothing; a
-    restarted pipeline reads its state's row count from the held table,
-    not with a count job."""
+    the sink delivers; the state version is written on the driver. An
+    idle tick, also the first tick of a pipeline restarted over an
+    unchanged tree, runs no job at all."""
     from kafka_connect_ftp_spark.streaming.ingest_stream import idempotent_parquet_sink
 
     for i in range(6):
@@ -396,9 +445,9 @@ def test_poll_job_budget(spark, tree, tmp_path):
 
     print(f"jobs per tick: backfill {backfill}, changes {changes}, idle {idle}, restart {restart}")
     assert backfill <= 2
-    assert changes <= 3
-    assert idle <= 2
-    assert restart <= 2
+    assert changes <= 2
+    assert idle == 0
+    assert restart == 0
 
 
 def _busy_pipeline(spark, tree, tmp_path):
@@ -421,11 +470,11 @@ def _busy_pipeline(spark, tree, tmp_path):
     return pipe, churn
 
 
-# py4j round trips of this test's warm tick, sink included: ~180
-# measured with the state held and written on the driver (290-370 when
-# a Spark job wrote it; 1,740-1,860 when every tick also built its
-# Column expressions afresh)
-_WARM_POLL_ROUND_TRIPS = 450
+# py4j round trips of this test's warm tick, sink included: ~145
+# measured with change detection on the driver (~180 when Spark joined
+# the listing with the state; 290-370 when a Spark job wrote the state;
+# 1,740-1,860 when every tick also built its Column expressions afresh)
+_WARM_POLL_ROUND_TRIPS = 360
 
 
 def test_warm_poll_py4j_round_trips(spark, tree, tmp_path, monkeypatch):
@@ -517,7 +566,7 @@ def test_sink_failure_during_state_write_commits_nothing(spark, tree, tmp_path, 
     marker = os.path.join(state_dir, "CURRENT")
     with open(marker) as fh:
         committed = fh.read()
-    before = sorted(pipe.load_state().collect())
+    before = sorted(state_rows(spark, pipe))
     assert pipe.last_metrics["n_tracked_paths"] == 2
 
     write(tree, "updates/u0", b"v2!", T0 + 60)
@@ -537,7 +586,7 @@ def test_sink_failure_during_state_write_commits_nothing(spark, tree, tmp_path, 
         pipe.poll(sink=failing_sink, epoch=1, now="2024-06-01 12:01:00")
     with open(marker) as fh:
         assert fh.read() == committed
-    assert sorted(pipe.load_state().collect()) == before
+    assert sorted(state_rows(spark, pipe)) == before
     assert pipe.last_metrics["n_tracked_paths"] == 2
 
     delivered = []
@@ -552,7 +601,7 @@ def test_sink_failure_during_state_write_commits_nothing(spark, tree, tmp_path, 
     with open(marker) as fh:
         assert fh.read().split("\n")[0] == "v1"
     # the current v1 is the retry's write, not the failed tick's
-    state = {r.path.rsplit("/", 1)[-1]: r for r in pipe.load_state().collect()}
+    state = {r.path.rsplit("/", 1)[-1]: r for r in state_rows(spark, pipe)}
     assert sorted(state) == ["u0", "u1", "u2"]
     assert str(state["u0"].last_inspected) == "2024-06-01 12:02:00"
     assert pipe.poll().count() == 0

@@ -28,7 +28,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kafka_connect_ftp_spark.ingest.model import META_SCHEMA, local_frame  # noqa: E402
+import pyarrow as pa  # noqa: E402
+
+from kafka_connect_ftp_spark.ingest.model import META_ARROW_SCHEMA, META_SCHEMA, local_frame  # noqa: E402
 from kafka_connect_ftp_spark.session import get_spark  # noqa: E402
 
 ROWS = 74
@@ -40,11 +42,11 @@ def _identity(batches):
 
 def stages(spark):
     """name -> a function that runs one 1-partition stage over ROWS rows."""
-    df = local_frame(spark, META_SCHEMA, {
+    df = local_frame(spark, META_SCHEMA, pa.Table.from_pydict({
         "path": [f"/tree/d{i % 50}/f{i}.log" for i in range(ROWS)],
         "size": [4096 * (i + 1) for i in range(ROWS)],
         "modification_time": [1_717_243_200_000_000 + i for i in range(ROWS)],
-    }).coalesce(1)
+    }, schema=META_ARROW_SCHEMA)).coalesce(1)
     return {
         "jvm": lambda: df.write.format("noop").mode("overwrite").save(),
         "rdd.map": lambda: df.rdd.map(lambda row: row).count(),
