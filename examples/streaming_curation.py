@@ -1,6 +1,7 @@
 """Incremental corpus curation: documents ARRIVE (a file-source stream
-standing in for the FTP ingest stream of sources/ftp_datasource.py) and
-flow through the composed curation gate as they land —
+standing in for the records the FTP ingest stream lands: ``StreamingIngest``
+over ``PollPipeline(source=FtpSource(...))``) and flow through the
+composed curation gate as they land —
 
     arriving docs
       → ONE foreachBatch (streaming/curation_stream.py), ONE checkpoint:

@@ -68,7 +68,6 @@ def shuffled_shards(
     salt: str = "v1",
     n_shards: int | None = None,
     sort_prefix: tuple[str, ...] = (),
-    legacy_key: bool = False,
 ) -> DataFrame:
     """The shuffle half of shard assembly, as a frame: deterministic
     hash-random order, ``n_shards`` hash partitions, internal sort.
@@ -83,13 +82,8 @@ def shuffled_shards(
     so no extra sort is planned and the key stays the secondary order
     within each split.
 
-    ``legacy_key=True`` keeps the pre-round-10 routing spelling
-    (``xxhash64(salt, cast(id AS string))`` — integral ids UNpadded) so
-    an existing shard set stays byte-stable across upgrades; the
-    default routes on the canonical :func:`sample_key_col` shared with
-    the wds writers. Migrating a legacy layout is one deterministic
-    re-export with the default knob (or keep passing legacy_key=True
-    forever — both spellings are self-consistent and replay-safe)."""
+    Rows route on the canonical :func:`sample_key_col` shared with the
+    wds writers."""
     spark = df.sparkSession
     if n_shards is not None and n_shards < 1:
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
@@ -102,10 +96,7 @@ def shuffled_shards(
     n = n_shards if n_shards is not None else int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
-    key_id = (
-        F.col(id_col).cast("string") if legacy_key else sample_key_col(df, id_col)
-    )
-    key = F.xxhash64(F.lit(salt), key_id)
+    key = F.xxhash64(F.lit(salt), sample_key_col(df, id_col))
     # id_col as the sort tie-break: equal hash keys (duplicate ids) would
     # otherwise land in nondeterministic relative order across re-runs
     # (shuffle fetch order is arbitrary and the sort is not stable),
@@ -131,7 +122,6 @@ def write_training_shards(
     n_shards: int | None = None,
     max_records_per_file: int = 0,
     fmt: str = "parquet",
-    legacy_key: bool = False,
 ) -> DataFrame:
     """Write ``df`` as randomly-ordered, split-partitioned shards; returns
     the per-split row counts (one tiny action over the written data, so
@@ -147,7 +137,6 @@ def write_training_shards(
         salt=salt,
         n_shards=n_shards,
         sort_prefix=(split_col,) if split_col is not None else (),
-        legacy_key=legacy_key,
     )
     # dropping the key is a projection: partitioning and intra-partition
     # order survive into the write

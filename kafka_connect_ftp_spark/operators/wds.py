@@ -19,13 +19,10 @@ Scale design:
   10 — ONE spelling across ``write_wds_shards``, ``sharding.py`` and
   ``reshard_wds``: parquet shards and wds shards of the same corpus
   now correspond, and a same-knob reshard is byte-identical to a
-  direct export (the read-back key IS the routing key). Shard sets
-  written before round 10 used the raw-id spelling; re-routing them is
-  one deterministic reshard with today's knobs (``legacy_key=True``
-  reproduces the old layout if byte-stability across the upgrade
-  matters more). Each shard is ONE task's partition, so
-  the export is embarrassingly parallel and no executor ever holds more
-  than its stream position in memory (tarfile writes member-by-member);
+  direct export (the read-back key IS the routing key). Each shard is
+  ONE task's partition, so the export is embarrassingly parallel and
+  no executor ever holds more than its stream position in memory
+  (tarfile writes member-by-member);
 - tar members are written in the partition's deterministic hash order
   with a FIXED mtime/uid/perm header, so shard bytes are reproducible
   run to run (byte-identity is test-pinned) — the property object-store
@@ -88,7 +85,6 @@ def write_wds_shards(
     id_col: str = "doc_id",
     n_shards: int = 8,
     salt: str = "v1",
-    legacy_key: bool = False,
 ) -> list[str]:
     """Export ``df`` as ``n_shards`` webdataset tar shards under
     ``out_dir``; returns the shard paths. ``fields`` maps column name →
@@ -97,9 +93,8 @@ def write_wds_shards(
     write — anything else raw bytes from a binary column, e.g.
     ``{"text": "txt", "meta": "json", "content": "jpg"}``). Sample keys are the zero-padded
     ``id_col`` values; rows land in shards by ``xxhash64(salt,
-    sample_key)`` (the canonical ``sharding.sample_key_col`` spelling;
-    ``legacy_key=True`` keeps the pre-round-10 raw-id routing for
-    byte-stability with existing shard sets) and are tar'd in
+    sample_key)`` (the canonical ``sharding.sample_key_col`` spelling)
+    and are tar'd in
     deterministic hash order (same corpus + salt → byte-identical
     shards)."""
     if not fields:
@@ -122,10 +117,7 @@ def write_wds_shards(
     from kafka_connect_ftp_spark.operators.sharding import sample_key_col
 
     narrowed = df.select(id_col, *fields)
-    key = F.xxhash64(
-        F.lit(salt),
-        F.col(id_col) if legacy_key else sample_key_col(narrowed, id_col),
-    )
+    key = F.xxhash64(F.lit(salt), sample_key_col(narrowed, id_col))
     # the tar member key is computed JVM-side with the SAME canonical
     # sample_key_col spelling the router hashes (round 12: the Python
     # side previously re-derived it per Row — one spelling, zero

@@ -32,8 +32,6 @@ from pyspark.sql import types as T
 from kafka_connect_ftp_spark.ingest.model import (
     META_ARROW_SCHEMA,
     MonitoredPath,
-    glob_free_prefix,
-    glob_to_regex,
     monitors_regex,
     walk_roots,
     with_content,
@@ -74,28 +72,6 @@ class FtpSource:
         return ftp
 
     # -- listing (driver-side metadata walk) ------------------------------
-    def list_files(
-        self, pattern: str, ftp: ftplib.FTP | None = None
-    ) -> list[tuple[str, int, dt.datetime]]:
-        """All plain files matching the glob ``pattern`` (full-path match,
-        segment-scoped wildcards — FtpFileLister.scala:27-53). Pass an
-        open ``ftp`` connection to reuse it (caller keeps ownership)."""
-        rx = re.compile(glob_to_regex(pattern))
-        base = glob_free_prefix(pattern)
-        own = ftp is None
-        if own:
-            ftp = self._connect()
-        mode = {"mlsd": self._prefer_mlsd}
-        try:
-            return [
-                (path, size, mtime)
-                for path, size, mtime in _walk(ftp, base, rx, mode=mode)
-            ]
-        finally:
-            self._prefer_mlsd = mode["mlsd"]
-            if own:
-                _quietly_close(ftp)
-
     def listing(self, spark: SparkSession, monitors: Iterable[MonitoredPath]) -> pa.Table:
         """Metadata-only listing (META_ARROW_SCHEMA): one walk per
         disjoint monitor base dir, all over one connection, matching the

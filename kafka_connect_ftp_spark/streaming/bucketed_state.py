@@ -38,9 +38,7 @@ Mechanics shared by every user (all MEASURED round 11, span state):
   would silently mis-bucket the join); ``STATE_SPEC`` pins the
   schema/clustering (so a band-state dir cannot be reopened as a
   span state, and the epoch compactor can rebuild the table without
-  being told which kind it is). Legacy round-11 span dirs carry only
-  ``BUCKETS``; a missing spec marker is backfilled on first touch
-  when the caller's spec matches the span layout.
+  being told which kind it is).
 """
 
 from __future__ import annotations
@@ -112,20 +110,17 @@ def _write_marker(path: str, content: str) -> None:
 
 
 def load_spec(state_dir: str) -> StateSpec | None:
-    """The spec a bucketed state dir was created with, or the legacy
-    span layout for a round-11 dir that predates the marker, or None
-    for a dir with no bucketed markers at all."""
+    """The spec a bucketed state dir was created with, or None for a
+    dir without the ``STATE_SPEC`` marker."""
     raw = _read_marker(os.path.join(state_dir, _SPEC_MARKER))
-    if raw is not None:
-        d = json.loads(raw)
-        return StateSpec(
-            d["prefix"],
-            tuple((n, t) for n, t in d["columns"]),
-            tuple(d["bucket_cols"]),
-        )
-    if _read_marker(os.path.join(state_dir, _BUCKETS_MARKER)) is not None:
-        return SPAN_SPEC
-    return None
+    if raw is None:
+        return None
+    d = json.loads(raw)
+    return StateSpec(
+        d["prefix"],
+        tuple((n, t) for n, t in d["columns"]),
+        tuple(d["bucket_cols"]),
+    )
 
 
 def is_bucketed_dir(state_dir: str) -> bool:
@@ -161,13 +156,11 @@ def ensure_table(spark, state_dir: str, buckets: int, spec: StateSpec) -> str:
                 "bucketed table over them would read unbucketed files "
                 "as bucketed and return wrong joins — use a fresh dir"
             )
-        # root-level DATA files = a legacy FLAT-layout plain state (the
-        # pre-epoch layout _migrate_flat_state exists for). Writing
+        # root-level DATA files = a FLAT-layout plain state. Writing
         # markers over it would create an empty bucketed table BESIDE
         # the flat files — every previously admitted key silently
         # invisible, near-dups of admitted docs re-admitted (review
-        # r12). The plain path migrates such dirs; the bucketed path
-        # must refuse them.
+        # r12) — so the bucketed path refuses them.
         flat = [
             e
             for e in os.listdir(state_dir)
@@ -183,14 +176,10 @@ def ensure_table(spark, state_dir: str, buckets: int, spec: StateSpec) -> str:
             raise ValueError(
                 f"state at {state_dir} holds FLAT-layout plain state "
                 f"files ({flat[:3]}...); a bucketed table beside them "
-                "would silently ignore every accumulated key — open it "
-                "in plain mode once (which migrates the layout) or use "
-                "a fresh dir"
+                "would silently ignore every accumulated key — use a "
+                "fresh dir"
             )
-    spec_marker = os.path.join(state_dir, _SPEC_MARKER)
-    stored = load_spec(state_dir) if (
-        pre_existing or _read_marker(spec_marker) is not None
-    ) else None
+    stored = load_spec(state_dir)
     if stored is not None and stored != spec:
         raise ValueError(
             f"state at {state_dir} was created as {stored.prefix} "
@@ -198,9 +187,9 @@ def ensure_table(spark, state_dir: str, buckets: int, spec: StateSpec) -> str:
             f"({spec.cols_ddl}) would silently mis-join — wrong state "
             "dir or wrong id column type"
         )
-    if _read_marker(spec_marker) is None:
+    if stored is None:
         _write_marker(
-            spec_marker,
+            os.path.join(state_dir, _SPEC_MARKER),
             json.dumps(
                 {
                     "prefix": spec.prefix,
@@ -212,9 +201,7 @@ def ensure_table(spark, state_dir: str, buckets: int, spec: StateSpec) -> str:
     if not pre_existing:
         # BUCKETS is written AFTER STATE_SPEC (review r12): a crash
         # between the two leaves a SPEC-only dir, which re-opens
-        # correctly — the reverse order left a BUCKETS-only dir that
-        # load_spec's legacy fallback misclassified as a round-11 span
-        # state FOREVER (hand-delete to recover)
+        # correctly and still gets the spec check above
         _write_marker(marker, str(buckets))
     name = table_name(spec, state_dir)
     if not spark.catalog.tableExists(name):

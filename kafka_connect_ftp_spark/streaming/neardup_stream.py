@@ -205,34 +205,6 @@ def filter_micro_batch(
     return admitted, admitted_bands
 
 
-def _migrate_flat_state(spark, state_dir: str) -> None:
-    """One-time upgrade of a legacy flat-layout state dir: rename every
-    root-level DATA file (not ``_``/``.``-hidden) into the reserved
-    ``epoch=-1`` partition. No-op when the dir is absent or already
-    epoch-only. Rationale in ``read_band_state``'s docstring."""
-    from kafka_connect_ftp_spark.hadoop_fs import hadoop_fs
-
-    jvm, fs, hpath = hadoop_fs(spark, state_dir)
-    if not fs.exists(hpath):
-        return
-    flat = [
-        st.getPath()
-        for st in fs.listStatus(hpath)
-        if st.isFile() and st.getPath().getName()[:1] not in ("_", ".")
-    ]
-    if not flat:
-        return
-    dest_dir = jvm.org.apache.hadoop.fs.Path(hpath, "epoch=-1")
-    fs.mkdirs(dest_dir)
-    for src in flat:
-        dest = jvm.org.apache.hadoop.fs.Path(dest_dir, src.getName())
-        if not fs.rename(src, dest):
-            # a silent False (name collision, concurrent reader) would
-            # leave the flat file to be ignored by partition discovery —
-            # exactly the data loss this migration exists to prevent
-            raise IOError(f"flat-state migration failed: {src} -> {dest}")
-
-
 def _band_spec_for(batch: DataFrame, id_col: str):
     """Band-state StateSpec with the doc_id DDL type taken from the
     batch's actual id column — the state stores whatever id type the
@@ -274,18 +246,7 @@ def read_band_state(
     already-delivered rows. Excluding the own epoch makes the replay a
     from-scratch recomputation against exactly the pre-batch state:
     deterministic operators then rewrite sink AND state byte-identically
-    regardless of how torn the first attempt was.
-
-    Legacy flat-layout state (a pre-epoch dir holding root-level parquet
-    files) is MIGRATED on first read: root-level data files are renamed
-    into the reserved ``epoch=-1`` partition before the read, because
-    once any ``epoch=N`` subdir exists Spark's partition discovery
-    silently ignores root-level files — without the migration every
-    pre-upgrade band key would vanish from the dedup state and near-dups
-    of previously-admitted documents would be re-admitted. The rename is
-    per-file-atomic and idempotent (a crash mid-migration leaves some
-    flat files for the next read to move); batch ids are >= 0, so
-    ``exclude_epoch`` never drops the migrated partition. Shared by the
+    regardless of how torn the first attempt was. Shared by the
     single-gate step below and the composed curation step
     (streaming/curation_stream.py).
 
@@ -294,8 +255,7 @@ def read_band_state(
     the per-batch semi-join then reads the state bucket-aligned with
     NO state-side Exchange, so per-batch cost is bounded by the batch,
     not by history; must match the count the state was created with on
-    every call. The flat-layout migration is plain-mode-only (a
-    bucketed dir never held flat files)."""
+    every call."""
     from pyspark.errors import AnalysisException
 
     from kafka_connect_ftp_spark.streaming.bucketed_state import (
@@ -318,8 +278,6 @@ def read_band_state(
             "(reading its files as plain epoch dirs would miss the "
             "bucketed/ data entirely)"
         )
-    _migrate_flat_state(spark, state_dir)
-
     state_schema = band_signatures(
         minhash_signatures(
             batch.limit(0), id_col, text_col,

@@ -39,9 +39,6 @@ NEGATIVE epoch number. Why that is safe:
   another input to the next run; ``distinct()`` keeps re-folds from
   accumulating duplicate rows.
 
-The reserved ``epoch=-1`` flat-migration partition
-(neardup_stream._migrate_flat_state) is an ordinary fold input.
-
 Bucketed mode (``buckets=N`` — span and band states; the STATE_SPEC
 marker tells the compactor which kind of state lives in the dir) keeps
 the CLUSTERED BY layout: fold rows detour through a ``compact_tmp``
@@ -203,9 +200,7 @@ def _compact_bucketed(
     )
 
     # the STATE_SPEC marker says what kind of state lives here (span
-    # hashes, band keys, ...) — the compactor never needs to be told,
-    # and legacy round-11 span dirs without the marker default to the
-    # span layout
+    # hashes, band keys, ...) — the compactor never needs to be told
     spec = load_spec(state_dir)
     if spec is None:
         return {"folded": [], "target": None}

@@ -8,7 +8,9 @@ import datetime as dt
 import os
 import re
 
+import pyarrow as pa
 import pytest
+from pyspark.sql.types import TimestampType
 
 from kafka_connect_ftp_spark.ingest.model import META_SCHEMA, MonitoredPath, local_frame
 from kafka_connect_ftp_spark.ingest.pipeline import PollPipeline
@@ -81,21 +83,33 @@ def listing_frame(spark, source, monitors):
     return local_frame(spark, META_SCHEMA, source.listing(spark, monitors))
 
 
+def listed(spark, source, pattern):
+    """``source.listing`` for one monitor of glob ``pattern``, as
+    ``(path, size, mtime)`` tuples with each mtime a naive datetime."""
+    table = source.listing(spark, [MonitoredPath(pattern, topic="t")])
+    to_datetime = TimestampType().fromInternal
+    micros = table["modification_time"].cast(pa.int64()).to_pylist()
+    return [
+        (p, s, to_datetime(m))
+        for p, s, m in zip(table["path"].to_pylist(), table["size"].to_pylist(), micros)
+    ]
+
+
 @pytest.fixture
 def src():
     files = dict(TREE)
     return FtpSource(host="fake", _client_factory=lambda: FakeFtp(files)), files
 
 
-def test_glob_traversal_matches_reference_fixture(src):
+def test_glob_traversal_matches_reference_fixture(spark, src):
     source, _ = src
-    got = sorted(p for p, _, _ in source.list_files("/a/dir?/path/*.txt"))
+    got = sorted(p for p, _, _ in listed(spark, source, "/a/dir?/path/*.txt"))
     assert got == ["/a/dira/path/file1.txt", "/a/dirb/path/file3.txt"]
 
 
-def test_fixed_path_listing(src):
+def test_fixed_path_listing(spark, src):
     source, _ = src
-    got = [(p, s) for p, s, _ in source.list_files("/a/dirb/path/file4.csv")]
+    got = [(p, s) for p, s, _ in listed(spark, source, "/a/dirb/path/file4.csv")]
     assert got == [("/a/dirb/path/file4.csv", 4)]
 
 
@@ -139,9 +153,9 @@ def test_ftp_listing_through_snapshot_plan(spark, src):
     assert got2 == {("/a/dirb/path/file3.txt", b"three+more")}
 
 
-def test_timestamp_parsing():
+def test_timestamp_parsing(spark):
     src = FtpSource(host="fake", _client_factory=lambda: FakeFtp({"/x/f": b"z"}, mtime="20231231235959"))
-    [(_, _, mtime)] = src.list_files("/x/*")
+    [(_, _, mtime)] = listed(spark, src, "/x/*")
     assert mtime == dt.datetime(2023, 12, 31, 23, 59, 59)
 
 
@@ -170,22 +184,22 @@ class ListOnlyFtp(FakeFtp):
                 )
 
 
-def test_list_fallback_traverses_same_tree(src):
+def test_list_fallback_traverses_same_tree(spark, src):
     files = dict(TREE)
     source = FtpSource(host="fake", _client_factory=lambda: ListOnlyFtp(files))
-    got = sorted(p for p, _, _ in source.list_files("/a/dir?/path/*.txt"))
+    got = sorted(p for p, _, _ in listed(spark, source, "/a/dir?/path/*.txt"))
     assert got == ["/a/dira/path/file1.txt", "/a/dirb/path/file3.txt"]
     # sizes survive the LIST parse
-    sizes = {p: s for p, s, _ in source.list_files("/a/dirb/path/*")}
+    sizes = {p: s for p, s, _ in listed(spark, source, "/a/dirb/path/*")}
     assert sizes == {"/a/dirb/path/file3.txt": 5, "/a/dirb/path/file4.csv": 4}
 
 
-def test_root_listing_failure_raises():
+def test_root_listing_failure_raises(spark):
     import ftplib
 
     source = FtpSource(host="fake", _client_factory=lambda: FakeFtp(dict(TREE)))
     with pytest.raises(ftplib.error_perm):
-        source.list_files("/nonexistent/dir/*")
+        listed(spark, source, "/nonexistent/dir/*")
 
 
 def test_parse_list_line_unrepresentable_date_skipped():
@@ -466,3 +480,99 @@ def test_busy_ftp_tick_job_budget(spark, tmp_path):
     assert backfill <= 2
     assert busy <= 2
     assert idle == 0
+
+
+def test_file_vanishing_between_list_and_retr_is_fetched_when_back(spark, tmp_path):
+    """A listed file that answers RETR with 550 (rotated away after the
+    LIST) costs the tick nothing else: the other files are delivered,
+    the missing one gets no state row, and the next tick fetches it
+    once it is back."""
+    import ftplib
+
+    files = {"/v/a": b"a", "/v/b": b"b", "/v/c": b"c"}
+    gone = {"/v/b"}
+
+    class VanishingFtp(FakeFtp):
+        def retrbinary(self, cmd, callback):
+            if cmd.split(" ", 1)[1] in gone:
+                raise ftplib.error_perm("550 no such file")
+            super().retrbinary(cmd, callback)
+
+    pipe = PollPipeline(
+        spark, [MonitoredPath("/v/", topic="t")], str(tmp_path / "state"),
+        source=FtpSource(host="fake", _client_factory=lambda: VanishingFtp(files)),
+    )
+    got = {(r.key_name, bytes(r.value)) for r in pipe.poll().collect()}
+    assert got == {("/v/a", b"a"), ("/v/c", b"c")}
+    assert sorted(pipe.load_state()["path"].to_pylist()) == ["/v/a", "/v/c"]
+
+    gone.clear()
+    got = {(r.key_name, bytes(r.value)) for r in pipe.poll().collect()}
+    assert got == {("/v/b", b"b")}
+    assert sorted(pipe.load_state()["path"].to_pylist()) == ["/v/a", "/v/b", "/v/c"]
+
+
+def test_mlsd_downgrade_is_sticky_across_listings(spark):
+    """A server that answers MLSD with 502 once puts the source on
+    classic LIST for good: its next listing sends no MLSD, so LIST's
+    coarser timestamps never flip back to MLSD's and re-stamp the tree."""
+    import ftplib
+
+    mlsd_calls = []
+
+    class OnceMlsdFtp(ListOnlyFtp):
+        def mlsd(self, path, facts=()):
+            mlsd_calls.append(path)
+            if len(mlsd_calls) == 1:
+                raise ftplib.error_perm("502 MLSD not implemented")
+            return FakeFtp.mlsd(self, path, facts)
+
+    source = FtpSource(host="fake", _client_factory=lambda: OnceMlsdFtp(dict(TREE)))
+    monitors = [MonitoredPath("/a/dirb/path/", topic="t")]
+    first = source.listing(spark, monitors)
+    assert mlsd_calls == ["/a/dirb/path"]
+    second = source.listing(spark, monitors)
+    assert mlsd_calls == ["/a/dirb/path"]
+    assert second.sort_by("path").equals(first.sort_by("path"))
+    assert sorted(second["path"].to_pylist()) == [
+        "/a/dirb/path/file3.txt", "/a/dirb/path/file4.csv",
+    ]
+
+
+def test_noop_clock_keeps_the_control_channel_alive(monkeypatch):
+    """Between transfers the clock sends NOOP once the interval has
+    passed since the last transfer, none before that, and a failed
+    NOOP never fails the fetch."""
+    import ftplib
+    import types
+
+    from kafka_connect_ftp_spark.sources import ftp as ftp_module
+
+    now = [100.0]
+    monkeypatch.setattr(ftp_module, "time", types.SimpleNamespace(monotonic=lambda: now[0]))
+
+    class Control:
+        def __init__(self, fail=False):
+            self.sent, self.fail = [], fail
+
+        def voidcmd(self, cmd):
+            self.sent.append(cmd)
+            if self.fail:
+                raise ftplib.error_temp("421 control connection timed out")
+
+    clock = ftp_module._NoopClock(interval_seconds=15.0)
+    ftp = Control()
+    now[0] = 110.0
+    clock.tick(ftp)
+    assert ftp.sent == []
+    now[0] = 124.9
+    clock.tick(ftp)
+    assert ftp.sent == []
+    now[0] = 140.0
+    clock.tick(ftp)
+    assert ftp.sent == ["NOOP"]
+
+    failing = Control(fail=True)
+    now[0] = 160.0
+    clock.tick(failing)
+    assert failing.sent == ["NOOP"]

@@ -152,50 +152,6 @@ def test_idempotent_replay_never_duplicates(spark, tmp_path):
     assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [1, 3, 5]
 
 
-def test_legacy_flat_state_migrates_not_vanishes(spark, tmp_path):
-    # ADVICE r7 regression: a round-6 state dir holds FLAT parquet files
-    # (no epoch= partition). Once the upgraded step writes its first
-    # epoch=N subdir, Spark partition discovery silently ignores every
-    # root-level file — all pre-upgrade band keys would vanish and
-    # near-dups of previously-admitted docs would be re-admitted. The
-    # fix migrates flat files into the reserved epoch=-1 partition on
-    # read, so legacy keys keep filtering.
-    import glob
-    import os
-
-    from kafka_connect_ftp_spark.operators.text_dedup import (
-        band_signatures,
-        minhash_signatures,
-    )
-    from kafka_connect_ftp_spark.streaming.neardup_stream import make_near_dup_step
-
-    out = str(tmp_path / "out_m")
-    state = str(tmp_path / "state_m")
-    # legacy layout: the admitted doc's band keys as ROOT-level parquet
-    legacy = spark.createDataFrame([(1, _BASE)], _SCHEMA)
-    band_signatures(minhash_signatures(legacy, "doc_id", "text")).coalesce(
-        1
-    ).write.mode("overwrite").parquet(state)
-    assert glob.glob(os.path.join(state, "*.parquet"))  # flat files exist
-
-    step = make_near_dup_step(spark, out, state, idempotent=True)
-    # near-dup of the legacy-admitted doc 1 plus one fresh doc: the
-    # legacy state must drop 9 and admit only 30
-    b = spark.createDataFrame([(9, _mutate(_BASE, 9)), (30, _THIRD)], _SCHEMA)
-    step(b, 0)
-    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [30]
-    # flat files were physically moved into epoch=-1 (idempotent rename)
-    assert not glob.glob(os.path.join(state, "*.parquet"))
-    assert glob.glob(os.path.join(state, "epoch=-1", "*.parquet"))
-    # and both generations of state keep filtering on the NEXT batch
-    b2 = spark.createDataFrame(
-        [(40, _mutate(_BASE, 40)), (41, _mutate(_THIRD, 41)), (50, _OTHER)],
-        _SCHEMA,
-    )
-    step(b2, 1)
-    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [30, 50]
-
-
 def test_uncommitted_state_dir_reads_empty_not_wedged(spark, tmp_path):
     # ADVICE r6 regression: a crash during the very FIRST state append
     # can leave the state dir existing but holding no committed parquet

@@ -354,15 +354,6 @@ def test_unified_routing_key_across_writers(spark, docs, tmp_path):
     got = docs.select(sample_key_col(docs, "doc_id").alias("k")).first().k
     assert len(got) == 12 and got.isdigit()
 
-    # legacy_key reproduces the pre-round-10 raw-id layout (different
-    # from the canonical one on an int-id corpus, self-consistent)
-    legacy = str(tmp_path / "legacy")
-    write_wds_shards(docs, legacy, fields=FIELDS, n_shards=3, salt="s9", legacy_key=True)
-    with open(tmp_path / "direct" / "shard-00000.tar", "rb") as fa, open(
-        tmp_path / "legacy" / "shard-00000.tar", "rb"
-    ) as fb:
-        assert fa.read() != fb.read()
-
 
 @pytest.mark.skipif(
     not __import__("os").environ.get("SPARK_GRAFT_SLOW"),
