@@ -16,10 +16,14 @@ Conventions that make the DuckDB hash-comparison stable:
 
 from __future__ import annotations
 
+import functools
+import uuid
 from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kafka_connect_ftp_spark.session import session_memo
 
 
 @dataclass(frozen=True)
@@ -32,131 +36,74 @@ class QuerySpec:
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
-# Shared PLAN memo (round 12 optimization; generalizes the round-9b
-# text_profile/_TP_PLAN_CACHE precedent): a DataFrame is an immutable
-# PLAN, and eager per-operation Catalyst analysis makes re-CONSTRUCTING
-# a deep plan cost 0.1-1s of driver time per invocation — 25-65% of the
-# measured per-query bench time at sf0.1, re-paid for an identical plan
-# (production is build-once/run-many; guide §7.3: planning time itself
-# can be the bottleneck). Queries registered with ``memo=True`` build
-# once per (session identity, sf_dir) and return the SAME plan object;
-# every execution of that plan still computes from the parquet inputs.
-#
-# Eligibility is strict — memo=True ONLY for pure plan constructors:
-#   * no eager driver actions on sf data (collect/first/count/toPandas):
-#     skipping those on a second call would cache data-derived results,
-#     not a plan (excluded: pq_adc_topk, ann_ivf_family,
-#     dedup_cluster_decision, bpe_train_tokenize, embedding_cosine_topk,
-#     embedding_norms; corpus_report joined the memo set in round 12
-#     after its overlap/rates sections moved in-plan —
-#     corpus_overlap_frame + the window-expression rates bridge);
-#   * no persist/cache/localCheckpoint inside the plan: a memoized
-#     frame would re-read materialized blocks instead of recomputing
-#     (excluded: minhash_lsh_pairs, ngram_jaccard_pairs, vocab_coverage);
-#   * no DATA-DERIVED driver-resident state baked into the plan:
-#     decontamination_flags stays out because bloom_prefilter_join
-#     stages the sketch (an aggregate of sf data) through the driver
-#     into a LogicalRDD — memoizing would freeze that sketch;
-#   * no filesystem/stream side effects in the fn (excluded:
-#     crawl_corpus_family, streaming_rollup_family).
-# Literal-seed training memos (lang_id profiles) are data-independent
-# constants and do not affect eligibility. The same reasoning admits
-# (round 12) the queries whose ONLY LogicalRDD nodes are createDataFrame
-# over COMPILE-TIME literal rows — deterministic constants, never
-# sf-data-derived state: ingest_snapshot_delta (empty ingest state + the
-# paired-duplicate corpus_diff fixtures; snapshot() runs checkpoint=False
-# so the two-tick + diff pipeline is one pure lazy plan),
-# scalar_funcs (the 4-entry literal blocklist; filter_by_blocklist runs
-# with max_broadcast_entries=None so no eager count), and
-# lineitem_reshape_family (the literal price-band table). The list is bounded and holds
-# the session object itself, so a recycled session id can never alias a
-# stale entry (the held reference pins the object).
-_PLAN_MEMO: list = []  # (session object, sf_dir, name, built DataFrame)
-_PLAN_MEMO_MAX = 128
 
-# The audited-pure set (audit: analyzed-plan scan for InMemoryRelation/
-# LogicalRDD/LocalRelation + a grep of every operator module each fn
-# calls for collect()/first()/count()/toPandas()/cache()/localCheckpoint
-# — tools/profile_variants.py docs the method; re-run the audit before
-# adding a name). Centralized here instead of per-decorator flags so the
-# eligibility rules and the list can be reviewed in one place.
-_MEMO_QUERIES = frozenset(
-    {
-        # tpch / tpch2 — pure scan+join+agg plans
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "q5_local_supplier_volume",
-        "q10_returned_items",
-        "q4_order_priority_checking",
-        "q18_large_volume_customers",
-        "q6_q14_scalar_family",
-        "q7_nation_volume",
-        "join_broadcast_dim",
-        "anti_join_idle_customers",
-        # analytics / advanced — pure window/agg/setop plans
-        "window_rank_family",
-        "window_events_range_lag",
-        "changelog_latest_state",
-        "sessionize_events",
-        "asof_join_click_purchase",
-        "sliding_window_counts",
-        "cube_returnflag_linestatus",
-        "setop_family",
-        "pivot_event_type_counts",
-        "order_rollup_family",
-        "argmax_order_per_customer",
-        "region_nation_lists",
-        # text / similarity — pure projection/agg plans (the trained-CT
-        # literal seed profiles are data-independent module memos)
-        "text_profile",
-        "dedup_exact",
-        "simhash_fingerprint",
-        "embedding_near_dup_pairs",
-        # llm pipeline / governance / corpus
-        "chunk_documents",
-        "quality_filter_flags",
-        "repetition_profile",
-        "governance_profile",
-        "span_dedup_decision",
-        "sequence_packing",
-        "multimodal_binary_meta",
-        # round 12: pure since the overlap pair arithmetic and the
-        # token-budget rates bridge moved in-plan (corpus_queries.py)
-        "corpus_report",
-        # round 12: pure lazy plans whose only LogicalRDDs are
-        # compile-time literal fixtures (module comment)
-        "ingest_snapshot_delta",
-        "scalar_funcs",
-        "lineitem_reshape_family",
-    }
-)
-
-
-def _memoized(name: str, fn):
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        for s, d, n, built in _PLAN_MEMO:
-            if s is spark and d == sf_dir and n == name:
-                return built
+def _build_checked(spark: SparkSession, sf_dir: str, fn) -> tuple[DataFrame, bool]:
+    """Build ``fn``'s frame, and say whether it may be reused for later
+    calls: only when the build ran no Spark job (nothing it holds was
+    derived from data by a driver action) and every leaf of its plan,
+    after cache substitution, is recomputed on each execution — a
+    parquet scan under ``sf_dir``, a literal ``LocalRelation``, a
+    ``Range``, or a ``LogicalRDD`` that is not checkpointed. A cached
+    (``InMemoryRelation``) or streaming leaf keeps the frame out."""
+    sc = spark.sparkContext
+    tag = f"plan-build-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
         df = fn(spark, sf_dir)
-        _PLAN_MEMO.append((spark, sf_dir, name, df))
-        del _PLAN_MEMO[:-_PLAN_MEMO_MAX]
-        return df
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    # the status store hears of jobs through the listener bus
+    jsc.listenerBus().waitUntilEmpty()
+    if len(jsc.statusTracker().getJobIdsForTag(tag)):
+        return df, False
+    return df, _recomputed_leaves(spark, df, sf_dir)
 
-    wrapped.__name__ = fn.__name__
-    wrapped.__doc__ = fn.__doc__
-    wrapped.__wrapped__ = fn
-    return wrapped
+
+def _recomputed_leaves(spark: SparkSession, df: DataFrame, sf_dir: str) -> bool:
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.hadoop.fs.Path(sf_dir)
+    root = str(root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).makeQualified(root))
+    under_root = root.rstrip("/") + "/"
+    plan = df._jdf.queryExecution().withCachedData()
+    subqueries = plan.subqueriesAll()
+    plans = [plan] + [subqueries.apply(i) for i in range(subqueries.size())]
+    for p in plans:
+        leaves = p.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            kind = leaf.nodeName()
+            if kind == "LogicalRelation":
+                rel = leaf.relation()
+                if rel.getClass().getSimpleName() != "HadoopFsRelation":
+                    return False
+                paths = rel.location().rootPaths()
+                for j in range(paths.size()):
+                    path = str(paths.apply(j))
+                    if path != root and not path.startswith(under_root):
+                        return False
+            elif kind == "LogicalRDD":
+                rdd = leaf.rdd()
+                if rdd.isCheckpointed() or rdd.isLocallyCheckpointed() or rdd.isReliablyCheckpointed():
+                    return False
+            elif kind not in ("LocalRelation", "Range"):
+                return False
+    return True
 
 
-def register(name: str, oracle: Optional[str], doc: str = "", memo: bool = False):
-    """Decorator: add a (spark, sf_dir) -> DataFrame callable to the registry.
-
-    ``memo=True`` — for PURE plan constructors only (see _PLAN_MEMO) —
-    caches the built DataFrame per (session, sf_dir); execution still
-    recomputes from the inputs every time."""
+def register(name: str, oracle: Optional[str], doc: str = ""):
+    """Decorator: add a (spark, sf_dir) -> DataFrame callable to the
+    registry. Its built frame is reused per (session, sf_dir) when the
+    build passes ``_build_checked``; execution still recomputes from the
+    inputs every time."""
 
     def deco(fn):
-        wrapped = _memoized(name, fn) if (memo or name in _MEMO_QUERIES) else fn
+        @functools.wraps(fn)
+        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return session_memo(
+                spark, ("plan", sf_dir, name), lambda: _build_checked(spark, sf_dir, fn)
+            )
+
         _REGISTRY[name] = QuerySpec(name=name, fn=wrapped, oracle=oracle, doc=doc)
         return wrapped
 

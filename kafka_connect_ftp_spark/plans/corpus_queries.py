@@ -401,8 +401,8 @@ def corpus_report(spark, sf_dir):
     # module doc) and hash-match the oracle's joins. The PLAN variant
     # (round 12): same KMV sketches, same values, but the pair
     # arithmetic runs in a tiny self-join instead of a driver collect —
-    # one fewer eager job per invocation, and the report becomes a pure
-    # plan constructor (memo-eligible, see _MEMO_QUERIES).
+    # one fewer eager job per invocation, so the registry memo can
+    # reuse the report's built plan (plans/__init__.py _build_checked).
     ov = corpus_overlap_frame(
         docs.withColumn("_pfx", F.expr(_PFX_SPARK)), "source", _KMV_K, key_col="_pfx"
     ).select(

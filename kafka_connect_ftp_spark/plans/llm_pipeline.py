@@ -435,10 +435,9 @@ def repetition_profile(spark, sf_dir):
     from kafka_connect_ftp_spark.operators.rule_gate import rule_gate
     from kafka_connect_ftp_spark.plans.text import _SCRIPT_PROBE_CASE, _docs_balanced
 
-    # plan memo: handled by the shared registry memo (plans/__init__.py
-    # _PLAN_MEMO): the routed rule_gate chain (literal lang->param maps
-    # + regex CASE trees) makes eager re-analysis cost ~1.3s of driver
-    # time per construction — production is build-once/execute-many
+    # the routed rule_gate chain (literal lang->param maps + regex CASE
+    # trees) makes eager re-analysis cost ~1.3s of driver time per
+    # construction; the registry memo reuses the built plan
     docs = _docs_balanced(spark, sf_dir)
     gop = gopher_quality_signals(
         docs.select("doc_id", F.expr(_GOPHER_AUG_SPARK).alias("text"))

@@ -40,9 +40,9 @@ def _events_schema(ts_nanos: bool) -> T.StructType:
 
 
 def _events_stream(spark, sf_dir):
-    from kafka_connect_ftp_spark.session import _nano_timestamp_cols
+    from kafka_connect_ftp_spark.session import _footer_schema
 
-    ts_nanos = bool(_nano_timestamp_cols(os.path.join(sf_dir, "events.parquet")))
+    ts_nanos = bool(_footer_schema(os.path.join(sf_dir, "events.parquet"))[1])
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     if ts_nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

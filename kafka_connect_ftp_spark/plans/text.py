@@ -18,9 +18,11 @@ bucket joins, which is the standard web-scale near-dup design.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from kafka_connect_ftp_spark.ingest.model import local_frame
 from kafka_connect_ftp_spark.plans import ORACLE_MAX_TOKENS, register
-from kafka_connect_ftp_spark.session import balanced, load_tables
+from kafka_connect_ftp_spark.session import balanced, load_tables, session_memo
 
 # tokens = non-empty chunks of a single-space split (documents are
 # lower-case word soup; both engines keep empty strings on split)
@@ -32,24 +34,15 @@ def _docs(spark, sf_dir):
     return load_tables(spark, sf_dir, "documents")["documents"]
 
 
-# balanced-docs PLAN memo (round 12): balanced() probes the scan's
-# partition count through df.rdd per call (~0.15s of driver/JVM work for
-# an identical answer), and five registry queries build the exact same
-# balanced docs scan. The frame is a pure plan (scan + optional
-# repartition — nothing materialized), so sharing it across queries and
-# invocations caches no results; same keying discipline as
-# plans/__init__._PLAN_MEMO (session object held → ids can't recycle).
-_BAL_DOCS_MEMO: list = []  # (session object, sf_dir, DataFrame)
-
-
 def _docs_balanced(spark, sf_dir):
-    for s, d, built in _BAL_DOCS_MEMO:
-        if s is spark and d == sf_dir:
-            return built
-    df = balanced(_docs(spark, sf_dir), spark, "doc_id")
-    _BAL_DOCS_MEMO.append((spark, sf_dir, df))
-    del _BAL_DOCS_MEMO[:-8]
-    return df
+    """The documents scan through ``balanced``, memoized per (session,
+    sf_dir): the partition-count probe costs ~0.15 s of driver/JVM work,
+    and five registry queries build this same frame."""
+    return session_memo(
+        spark,
+        ("balanced_docs", sf_dir),
+        lambda: (balanced(_docs(spark, sf_dir), spark, "doc_id"), True),
+    )
 
 
 # DSIR knobs shared by the vocab_coverage gate columns and their oracle
@@ -191,48 +184,54 @@ def _script_cte() -> str:
 _CT_TOPN = 64
 
 # trained CT profiles memoized per process (the crawl _FIXTURE_CACHE
-# convention): the seed corpus is a module literal, so the profile
+# convention): the seed corpus is a module literal, so each profile
 # table is a pure function of _CT_TOPN — retraining it on every
 # text_profile plan build (a Spark job + collect) charged ~1.5s of
-# driver time to each bench sample for identical rows
-_CT_PROF_ROWS: list | None = None
+# driver time to each bench sample for identical rows. The tables come
+# back as LocalRelation frames, which the classifiers collect without
+# running a job.
+_PROF_TABLES: dict = {}  # "ct" | "rt" -> pyarrow Table (lang, gram, rank)
+_PROF_SCHEMA = T.StructType(
+    [
+        T.StructField("lang", T.StringType()),
+        T.StructField("gram", T.StringType()),
+        T.StructField("rank", T.IntegerType()),
+    ]
+)
+
+
+def _trained_profiles(spark, key, train):
+    table = _PROF_TABLES.get(key)
+    if table is None:
+        table = _PROF_TABLES[key] = train().toArrow()
+    return local_frame(spark, _PROF_SCHEMA, table)
 
 
 def _ct_profiles(spark):
-    global _CT_PROF_ROWS
-    if _CT_PROF_ROWS is None:
-        from kafka_connect_ftp_spark.operators.lang_id import (
-            seed_frame,
-            train_char_profiles,
-        )
+    from kafka_connect_ftp_spark.operators.lang_id import seed_frame, train_char_profiles
 
-        _CT_PROF_ROWS = train_char_profiles(
-            seed_frame(spark), top_n=_CT_TOPN
-        ).collect()
-    return spark.createDataFrame(_CT_PROF_ROWS, "lang string, gram string, rank int")
-
-
-_RT_PROF_ROWS: list | None = None
+    return _trained_profiles(
+        spark, "ct", lambda: train_char_profiles(seed_frame(spark), top_n=_CT_TOPN)
+    )
 
 
 def _rt_profiles(spark):
     """The ROUTED profile table (full seed corpus, union alphabet),
     memoized like ``_ct_profiles`` — train-once/classify-many."""
-    global _RT_PROF_ROWS
-    if _RT_PROF_ROWS is None:
-        from kafka_connect_ftp_spark.operators.lang_id import (
-            NORM_KEEP_ROUTED,
-            SEED_TEXTS_ROUTED,
-            seed_frame,
-            train_char_profiles,
-        )
+    from kafka_connect_ftp_spark.operators.lang_id import (
+        NORM_KEEP_ROUTED,
+        SEED_TEXTS_ROUTED,
+        seed_frame,
+        train_char_profiles,
+    )
 
-        _RT_PROF_ROWS = train_char_profiles(
-            seed_frame(spark, SEED_TEXTS_ROUTED),
-            top_n=_CT_TOPN,
-            norm_keep=NORM_KEEP_ROUTED,
-        ).collect()
-    return spark.createDataFrame(_RT_PROF_ROWS, "lang string, gram string, rank int")
+    return _trained_profiles(
+        spark,
+        "rt",
+        lambda: train_char_profiles(
+            seed_frame(spark, SEED_TEXTS_ROUTED), top_n=_CT_TOPN, norm_keep=NORM_KEEP_ROUTED
+        ),
+    )
 
 
 def _ct_norm_duck(col: str, norm_keep: str | None = None) -> str:
@@ -474,14 +473,11 @@ def text_profile(spark, sf_dir):
         classify_lang_routed,
     )
 
-    # plan memo: handled by the shared registry memo (plans/__init__.py
-    # _PLAN_MEMO — round 12 generalization of the round-9b cache this
-    # query pioneered). The DataFrame is an immutable plan and this is
-    # the deepest one in the registry — two staged classifier chains
-    # with 15 literal gram→rank maps make EAGER re-analysis of the
-    # growing tree cost ~1.9s of driver time per construction, re-paid
-    # on every bench sample for an identical plan. Production is
-    # train-once/classify-many.
+    # the deepest plan in the registry — two staged classifier chains
+    # with 15 literal gram→rank maps make eager re-analysis cost ~1.9s
+    # of driver time per construction. The registry memo reuses it from
+    # the second build in a process on: the first trains the profiles,
+    # which runs Spark jobs.
     df = _docs_balanced(spark, sf_dir)
     # ONE map-side projection CHAIN, zero joins (round-9 rework: every
     # branch — script dispatch + routed CT, trained CT, C4 flags, token

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 # the directory holding this package, for the Python workers' path
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -138,30 +139,71 @@ _SHUFFLE_NODE_TOKENS = (
 )
 
 
-# footer-scan memo for _nano_timestamp_cols: the pyarrow dataset walk +
-# footer parse costs ~10-40ms per table per load_tables call, re-paid
-# for an identical answer on every query build (round 12). Keyed by
-# (path, mtime) so a regenerated testdata file invalidates its entry.
-_NANO_COLS_CACHE: dict[tuple[str, float], list[str]] = {}
+# One memo for every frame built per session: registry plans, table scans
+# and the balanced documents scan. A DataFrame is an immutable plan, and
+# eager analysis makes rebuilding a deep one cost 0.1-2 s of driver time;
+# a memoized frame still computes from its inputs on every execution.
+MEMO_MAX = 256
+_MEMO: list = []  # (session object, key, value)
 
 
-def _nano_timestamp_cols(path: str) -> list[str]:
-    """Column names stored as parquet TIMESTAMP(NANOS), which Spark's reader
-    rejects (PARQUET_TYPE_ILLEGAL). Footer-only check via pyarrow,
-    memoized per (path, mtime)."""
+def session_memo(spark: SparkSession, key: tuple, build):
+    """The value built for (``spark``, ``key``), from the memo or from
+    ``build() -> (value, keep)``, which stores it only when ``keep``.
+
+    Entries hold the session object and match it by identity, so a
+    recycled session id never aliases a stale entry; past ``MEMO_MAX``
+    the oldest entries go."""
+    for s, k, value in _MEMO:
+        if s is spark and k == key:
+            return value
+    value, keep = build()
+    if keep:
+        _MEMO.append((spark, key, value))
+        del _MEMO[:-MEMO_MAX]
+    return value
+
+
+# (path, mtime) -> (Spark schema, nanosecond timestamp columns): one
+# footer read per table file version
+_FOOTER_CACHE: dict[tuple[str, float], tuple[T.StructType, list[str]]] = {}
+
+
+def _footer_schema(path: str) -> tuple[T.StructType, list[str]]:
+    """The Spark schema of a parquet table, from its footer via pyarrow,
+    and its columns stored as TIMESTAMP(NANOS), which Spark's reader
+    rejects (PARQUET_TYPE_ILLEGAL); those read as ``LongType``. Handing
+    the schema to the reader spares Spark's schema-inference job."""
     key = (path, os.path.getmtime(path))
-    hit = _NANO_COLS_CACHE.get(key)
+    hit = _FOOTER_CACHE.get(key)
     if hit is not None:
         return hit
+    import pyarrow as pa
     import pyarrow.dataset as ds
     import pyarrow.types as pt
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     schema = ds.dataset(path, format="parquet").schema
-    out = [f.name for f in schema if pt.is_timestamp(f.type) and f.type.unit == "ns"]
-    _NANO_COLS_CACHE[key] = out
-    if len(_NANO_COLS_CACHE) > 256:
-        _NANO_COLS_CACHE.pop(next(iter(_NANO_COLS_CACHE)))
+    nano_cols = [f.name for f in schema if pt.is_timestamp(f.type) and f.type.unit == "ns"]
+    for c in nano_cols:
+        i = schema.get_field_index(c)
+        schema = schema.set(i, schema.field(i).with_type(pa.int64()))
+    out = (from_arrow_schema(schema, prefer_timestamp_ntz=False), nano_cols)
+    _FOOTER_CACHE[key] = out
+    if len(_FOOTER_CACHE) > 256:
+        _FOOTER_CACHE.pop(next(iter(_FOOTER_CACHE)))
     return out
+
+
+def _read_table(spark: SparkSession, path: str):
+    from pyspark.sql import functions as F
+
+    schema, nano_cols = _footer_schema(path)
+    df = spark.read.schema(schema).parquet(path)
+    for c in nano_cols:
+        # integer div: ns epochs exceed double's 2^53 mantissa
+        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str):
@@ -170,56 +212,25 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str):
     Returns a dict name -> DataFrame. Filters/projections on the returned
     frames push down to the parquet scan (verify via ``.explain``).
 
-    Nanosecond-precision timestamp columns (unsupported by Spark's parquet
-    reader) are read as raw INT64 via ``legacy.parquet.nanosAsLong`` and
-    truncated to microsecond TimestampType — same instant the DuckDB oracle
-    sees (test timestamps carry no sub-microsecond component).
+    The schema comes from the table's footer, so a load runs no Spark
+    job. Nanosecond-precision timestamp columns (unsupported by Spark's
+    parquet reader) are read as raw INT64 and truncated to microsecond
+    TimestampType — same instant the DuckDB oracle sees (test timestamps
+    carry no sub-microsecond component). Scan frames are memoized per
+    (session, path, mtime); the temp view is re-registered on every
+    call, so callers that overwrote the view name see it restored.
     """
-    from pyspark.sql import functions as F
-
     # defensive for sessions not built by get_spark: naive parquet
     # timestamps must surface as TimestampType (see get_spark)
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     out = {}
     for name in names:
         path = os.path.join(sf_dir, f"{name}.parquet")
-        # scan-frame memo (round 12): spark.read.parquet pays a JVM
-        # schema-analysis round trip (~0.1-0.2s) per call for an
-        # identical immutable PLAN — the same argument as the registry
-        # plan memo (plans/__init__.py _PLAN_MEMO). Nothing materialized
-        # is cached; every execution still scans the parquet file. The
-        # temp view is RE-registered on every call (cheap), so callers
-        # that overwrote the view name still see load_tables restore it.
-        mkey = (spark, path, os.path.getmtime(path))
-        df = None
-        for s, p, m, built in _SCAN_MEMO:
-            if s is spark and p == path and m == mkey[2]:
-                df = built
-                break
-        if df is None:
-            nano_cols = _nano_timestamp_cols(path)
-            if nano_cols:
-                # restore the caller's prior value, not a hardcoded 'false' —
-                # a caller running its own nano-parquet reads must not have
-                # the conf silently flipped under it
-                prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-                try:
-                    df = spark.read.parquet(path)
-                    for c in nano_cols:
-                        # integer div: ns epochs exceed double's 2^53 mantissa
-                        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-                finally:
-                    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
-            else:
-                df = spark.read.parquet(path)
-            _SCAN_MEMO.append((spark, path, mkey[2], df))
-            del _SCAN_MEMO[:-64]
+        df = session_memo(
+            spark,
+            ("scan", path, os.path.getmtime(path)),
+            lambda: (_read_table(spark, path), True),
+        )
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
-
-
-# (session object, path, mtime, DataFrame) — bounded; holds the session
-# reference so a recycled id can never alias a stale entry
-_SCAN_MEMO: list = []

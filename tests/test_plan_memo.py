@@ -1,23 +1,96 @@
-"""The shared registry plan memo (plans/__init__.py _PLAN_MEMO):
-pure queries rebuild once per (session, sf_dir) and return the same
-plan object; impure queries (driver actions / persisted intermediates /
-side effects) must never be memoized; execution of a memoized plan
-still recomputes from the parquet inputs (no InMemoryRelation in the
-executed plan)."""
+"""The registry plan memo (plans/__init__.py ``_build_checked``): a
+query's built frame is reused per (session, sf_dir) only when its build
+ran no Spark job and every plan leaf is recomputed on each execution.
+Driver actions, cached or checkpointed intermediates and streaming
+sinks keep a query out; execution of a memoized plan still recomputes
+from the parquet inputs (no InMemoryRelation in the executed plan)."""
 
 from __future__ import annotations
 
 import pytest
 
-from kafka_connect_ftp_spark.plans import _MEMO_QUERIES, _PLAN_MEMO, registry
+from kafka_connect_ftp_spark import plans
+from kafka_connect_ftp_spark.plans import register, registry
+from kafka_connect_ftp_spark.session import _MEMO, MEMO_MAX
 
 SF = "/root/testdata/sf0.001"
 SF2 = "/root/testdata/sf0.01"
+
+# what the rule admits at sf0.001: the registry's pure plan constructors
+MEMOIZED = frozenset(
+    {
+        "q1_pricing_summary",
+        "q3_shipping_priority",
+        "q5_local_supplier_volume",
+        "q10_returned_items",
+        "q4_order_priority_checking",
+        "q18_large_volume_customers",
+        "q6_q14_scalar_family",
+        "q7_nation_volume",
+        "join_broadcast_dim",
+        "anti_join_idle_customers",
+        "window_rank_family",
+        "window_events_range_lag",
+        "changelog_latest_state",
+        "sessionize_events",
+        "asof_join_click_purchase",
+        "sliding_window_counts",
+        "cube_returnflag_linestatus",
+        "setop_family",
+        "pivot_event_type_counts",
+        "order_rollup_family",
+        "argmax_order_per_customer",
+        "region_nation_lists",
+        "text_profile",
+        "dedup_exact",
+        "simhash_fingerprint",
+        "embedding_near_dup_pairs",
+        "chunk_documents",
+        "quality_filter_flags",
+        "repetition_profile",
+        "governance_profile",
+        "span_dedup_decision",
+        "sequence_packing",
+        "multimodal_binary_meta",
+        "corpus_report",
+        "ingest_snapshot_delta",
+        "scalar_funcs",
+        "lineitem_reshape_family",
+    }
+)
 
 
 @pytest.fixture(scope="module")
 def reg():
     return registry()
+
+
+def _stored(spark, sf_dir, name):
+    return any(s is spark and k == ("plan", sf_dir, name) for s, k, _ in _MEMO)
+
+
+@pytest.fixture(scope="module")
+def builds(spark, reg):
+    """Every query built twice at SF: name -> (first, second frame). Two
+    builds, because a first build in a process may pay one-time work
+    (text_profile trains its lang-id profiles)."""
+    return {name: (spec.fn(spark, SF), spec.fn(spark, SF)) for name, spec in reg.items()}
+
+
+def _leaves(df):
+    plan = df._jdf.queryExecution().withCachedData()
+    leaves = plan.collectLeaves()
+    return [leaves.apply(i) for i in range(leaves.size())]
+
+
+def test_derived_memo_set(spark, builds):
+    derived = {name for name in builds if _stored(spark, SF, name)}
+    assert derived == MEMOIZED
+    for name, (a, b) in builds.items():
+        if name not in MEMOIZED:
+            assert a is not b, name
+        elif name != "text_profile":  # stored on the first or second build
+            assert a is b, name
 
 
 def test_memoized_query_returns_same_plan_object(spark, reg):
@@ -45,15 +118,50 @@ def test_memo_keyed_by_session_identity(spark, reg):
     assert a is not b
 
 
-def test_impure_queries_are_not_memoized(spark, reg):
+def test_driver_action_keeps_a_query_out(spark, reg, monkeypatch):
+    # a memoized constructor with a .count() added: the build runs a job,
+    # so its frame would freeze data-derived state and must not be kept
+    monkeypatch.setattr(plans, "_REGISTRY", dict(plans._REGISTRY))
+    base = reg["dedup_exact"].fn.__wrapped__
+
+    @register("memo_control", None)
+    def control(spark, sf_dir):
+        return base(spark, sf_dir)
+
+    @register("memo_mutant_count", None)
+    def mutant(spark, sf_dir):
+        df = base(spark, sf_dir)
+        df.count()
+        return df
+
+    assert control(spark, SF) is control(spark, SF)
+    assert mutant(spark, SF) is not mutant(spark, SF)
+    assert not _stored(spark, SF, "memo_mutant_count")
+
+
+def test_streaming_and_checkpointed_queries_are_not_memoized(spark, builds):
+    # streaming_rollup_family reads a memory sink; crawl_corpus_family's
+    # warm build runs no job, but its plan holds checkpointed LogicalRDDs
+    a, b = builds["streaming_rollup_family"]
+    assert a is not b
+    assert not _stored(spark, SF, "streaming_rollup_family")
+    assert "MemoryPlan" in {leaf.nodeName() for leaf in _leaves(b)}
+    a, b = builds["crawl_corpus_family"]
+    assert a is not b
+    assert not _stored(spark, SF, "crawl_corpus_family")
+    rdds = [leaf.rdd() for leaf in _leaves(b) if leaf.nodeName() == "LogicalRDD"]
+    assert any(r.isCheckpointed() or r.isLocallyCheckpointed() for r in rdds)
+
+
+def test_impure_queries_are_not_memoized(spark, builds):
     # ngram_jaccard_pairs / minhash_lsh_pairs lazily localCheckpoint an
     # intermediate; memoizing them would reuse materialized blocks
     # across invocations (result caching). Guard the EXCLUSION, not
     # just the inclusion.
     for name in ("ngram_jaccard_pairs", "minhash_lsh_pairs"):
-        assert name not in _MEMO_QUERIES
-        fn = reg[name].fn
-        assert not hasattr(fn, "__wrapped__"), name
+        a, b = builds[name]
+        assert a is not b, name
+        assert not _stored(spark, SF, name)
     # and the side-effecting / driver-action families stay out
     for name in (
         "crawl_corpus_family",
@@ -68,7 +176,7 @@ def test_impure_queries_are_not_memoized(spark, reg):
         "decontamination_flags",
         "quality_model_flags",
     ):
-        assert name not in _MEMO_QUERIES, name
+        assert not _stored(spark, SF, name), name
 
 
 def test_memoized_plan_recomputes_from_inputs(spark, reg):
@@ -82,16 +190,15 @@ def test_memoized_plan_recomputes_from_inputs(spark, reg):
     assert "LogicalRDD" not in optimized
 
 
-def test_corpus_report_memoized_and_pure(spark, reg):
-    # round 12: corpus_report became a pure plan constructor (overlap
-    # pair arithmetic + rates bridge moved in-plan) and joined the memo
-    # set. Pin BOTH properties: the memo hit, and that the memoized plan
-    # holds no materialized/driver-local state (a LocalRelation would
-    # mean data-derived rows were frozen at build time — result caching).
-    fn = reg["corpus_report"].fn
-    assert "corpus_report" in _MEMO_QUERIES
-    a = fn(spark, SF)
-    assert fn(spark, SF) is a
+def test_corpus_report_memoized_and_pure(spark, builds):
+    # corpus_report is a pure plan constructor (overlap pair arithmetic
+    # + rates bridge in-plan). Pin BOTH properties: the memo hit, and
+    # that the memoized plan holds no materialized/driver-local state (a
+    # LocalRelation would mean data-derived rows were frozen at build
+    # time — result caching).
+    a, b = builds["corpus_report"]
+    assert _stored(spark, SF, "corpus_report")
+    assert a is b
     analyzed = a._jdf.queryExecution().analyzed().toString()
     assert "InMemoryRelation" not in analyzed
     assert "LogicalRDD" not in analyzed
@@ -102,18 +209,16 @@ def test_corpus_report_memoized_and_pure(spark, reg):
     "name",
     ["ingest_snapshot_delta", "scalar_funcs", "lineitem_reshape_family"],
 )
-def test_literal_logicalrdd_queries_memoized_and_pure(spark, reg, name):
-    # round 12: these queries joined the memo set. Their analyzed plans
-    # DO carry LogicalRDD nodes — but only from createDataFrame over
-    # compile-time literal fixtures (empty ingest state / paired-
-    # duplicate diff rows / the 4-entry blocklist / the price-band
-    # table), never sf-data-derived rows; pin that the memo hit exists
-    # and nothing MATERIALIZED (InMemoryRelation) or checkpoint-scanned
-    # rides the plan.
-    fn = reg[name].fn
-    assert name in _MEMO_QUERIES
-    a = fn(spark, SF)
-    assert fn(spark, SF) is a
+def test_literal_logicalrdd_queries_memoized_and_pure(spark, builds, name):
+    # these queries' analyzed plans DO carry LogicalRDD nodes — but only
+    # from createDataFrame over compile-time literal fixtures (empty
+    # ingest state / paired-duplicate diff rows / the 4-entry blocklist
+    # / the price-band table), never sf-data-derived rows; pin that the
+    # memo hit exists and nothing MATERIALIZED (InMemoryRelation) or
+    # checkpoint-scanned rides the plan.
+    a, b = builds[name]
+    assert _stored(spark, SF, name)
+    assert a is b
     analyzed = a._jdf.queryExecution().analyzed().toString()
     assert "InMemoryRelation" not in analyzed
     assert "Checkpoint" not in analyzed
@@ -151,12 +256,12 @@ def test_ngram_no_cross_invocation_cache_reuse(spark, reg):
 
 
 def test_memo_bounded(spark, reg):
-    from kafka_connect_ftp_spark.plans import _PLAN_MEMO_MAX
-
-    assert len(_PLAN_MEMO) <= _PLAN_MEMO_MAX
+    assert len(_MEMO) <= MEMO_MAX
 
 
-def test_memo_list_matches_registry_names(reg):
-    # every memo name must be a live registry entry — a renamed query
+def test_memo_list_matches_registry_names(spark, reg, builds):
+    # every memoized plan is a live registry entry — a renamed query
     # silently losing its memo would re-pay build cost unnoticed
-    assert _MEMO_QUERIES <= set(reg.keys())
+    assert MEMOIZED <= set(reg.keys())
+    names = {k[2] for s, k, _ in _MEMO if s is spark and k[:2] == ("plan", SF)}
+    assert MEMOIZED <= names

@@ -187,3 +187,57 @@ def test_session_outside_repo_without_pythonpath_runs_python_stage(tmp_path):
         capture_output=True, text=True, timeout=300,
     )
     assert "ids [0, 2, 4, 6]" in out.stdout, out.stderr[-3000:]
+
+
+SF = "/root/testdata/sf0.001"
+
+
+def _tagged_jobs(spark, fn):
+    import uuid
+
+    sc = spark.sparkContext
+    tag = f"jobs-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        fn()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return len(jsc.statusTracker().getJobIdsForTag(tag))
+
+
+def test_load_tables_supplies_the_inferred_schema_and_runs_no_job(spark):
+    import os
+
+    from kafka_connect_ftp_spark.session import _footer_schema, load_tables
+
+    names = sorted(f[: -len(".parquet")] for f in os.listdir(SF) if f.endswith(".parquet"))
+    assert len(names) == 10
+    for name in names:
+        path = os.path.join(SF, f"{name}.parquet")
+        assert _footer_schema(path)[0] == spark.read.parquet(path).schema, name
+    fresh = spark.newSession()
+    assert _tagged_jobs(fresh, lambda: load_tables(fresh, SF, *names)) == 0
+
+
+def test_load_tables_truncates_nanosecond_timestamps(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from kafka_connect_ftp_spark.session import load_tables
+
+    ns = [1_600_000_000_123_456_789, 1_700_000_000_000_001_000, None]
+    table = pa.table(
+        {"id": [1, 2, 3], "ts": pa.array(ns, pa.timestamp("ns")), "s": ["a", "b", None]}
+    )
+    pq.write_table(table, str(tmp_path / "nt.parquet"))
+    df = load_tables(spark, str(tmp_path), "nt")["nt"]
+    assert df.schema["ts"].dataType == T.TimestampType()
+    got = df.orderBy("id").select("id", F.unix_micros("ts").alias("us"), "s").collect()
+    assert [tuple(r) for r in got] == [
+        (1, 1_600_000_000_123_456, "a"),
+        (2, 1_700_000_000_000_001, "b"),
+        (3, None, None),
+    ]
