@@ -190,7 +190,7 @@ def _footer_schema(path: str) -> tuple[T.StructType, list[str]]:
         schema = schema.set(i, schema.field(i).with_type(pa.int64()))
     out = (from_arrow_schema(schema, prefer_timestamp_ntz=False), nano_cols)
     _FOOTER_CACHE[key] = out
-    if len(_FOOTER_CACHE) > 256:
+    if len(_FOOTER_CACHE) > MEMO_MAX:
         _FOOTER_CACHE.pop(next(iter(_FOOTER_CACHE)))
     return out
 
